@@ -134,30 +134,14 @@ object Bench {
     // exit 0 even with failures: the driver consumes the stdout JSON line,
     // and a nonzero exit could zero the whole round's bench artifact — the
     // "failed" field is the loud signal.
-    // The headline fields appear TWICE: leading (greps anchored on
-    // '{"metric"' — the verify skill and the measurement scripts — keep
-    // matching) and again trailing under DISTINCT names
-    // (metric_tail/unit_tail/value_tail), because the driver keeps only
-    // the TAIL of stdout and with 140+ queries the line outgrows that
-    // capture — r11/r12 driver artifacts lost metric/value to
-    // front-truncation. Distinct tail names keep the line strict-RFC-8259
-    // unique-key JSON (duplicate keys parse last-wins in practice but
-    // strict validators reject them).
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":${Verify.jsonStr(sfDir)},"n_queries":${good.size},"metric_tail":"total","unit_tail":"sec","value_tail":$total}"""
-    println(fullLine)
-    // r18 harness-contract fix (VERDICT r17 "Next round" #1): with 170
-    // queries the full line is ~5.5 KB and the driver keeps only a ~2 KB
-    // stdout TAIL, so its parser saw a front-truncated fragment and nulled
-    // the per-query PERF comparison for two consecutive rounds. Two-part
-    // remedy, semantics and timing methodology unchanged:
-    //  (a) the identical full JSON is ALSO written to a file
-    //      (SPARK_GRAFT_BENCH_OUT, default bench_out.json in cwd), the
-    //      durable per-query ground truth;
-    //  (b) the FINAL stdout line is a compact (<1 KB) parseable JSON with
-    //      the headline fields and a pointer to the file, so the tail
-    //      capture always ends with one complete object. The failed list
-    //      is capped at 10 names to keep the line bounded (n_failed
-    //      carries the true count).
+    // The full line (every query's seconds) goes to a file
+    // (SPARK_GRAFT_BENCH_OUT, default bench_out.json in cwd), the durable
+    // per-query ground truth. stdout gets exactly one JSON line, the last
+    // one: a compact (<1 KB) object with the headline fields and a pointer
+    // to the file, so a consumer that keeps only the tail of stdout always
+    // ends with one complete object. The failed list is capped at 10 names
+    // to keep the line bounded (n_failed carries the true count).
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":${Verify.jsonStr(sfDir)},"n_queries":${good.size}}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (fullLine + "\n").getBytes("UTF-8"))

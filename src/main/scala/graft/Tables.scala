@@ -1,7 +1,15 @@
 package graft
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Central loader for the driver testdata tables (TESTDATA.md).
   *
@@ -11,19 +19,80 @@ import org.apache.spark.sql.functions._
   * (events.ts — a parquet timestamp whose physical unit and UTC-adjustment
   * are PRODUCER-controlled, and have in fact changed between testdata
   * generations) is normalized once, in [[normalizeEventsTs]].
+  *
+  * Every loader goes through [[readParquet]]: each table's schema comes
+  * from one footer read in the calling process, and no Spark job runs
+  * until the query itself executes.
   */
 object Tables {
   def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
 
-  def region(s: SparkSession, d: String): DataFrame   = s.read.parquet(path(d, "region"))
-  def nation(s: SparkSession, d: String): DataFrame   = s.read.parquet(path(d, "nation"))
-  def customer(s: SparkSession, d: String): DataFrame = s.read.parquet(path(d, "customer"))
-  def supplier(s: SparkSession, d: String): DataFrame = s.read.parquet(path(d, "supplier"))
-  def part(s: SparkSession, d: String): DataFrame     = s.read.parquet(path(d, "part"))
-  def orders(s: SparkSession, d: String): DataFrame   = s.read.parquet(path(d, "orders"))
-  def lineitem(s: SparkSession, d: String): DataFrame = s.read.parquet(path(d, "lineitem"))
-  def documents(s: SparkSession, d: String): DataFrame = s.read.parquet(path(d, "documents"))
-  def embeddings(s: SparkSession, d: String): DataFrame = s.read.parquet(path(d, "embeddings"))
+  def region(s: SparkSession, d: String): DataFrame   = readParquet(s, path(d, "region"))
+  def nation(s: SparkSession, d: String): DataFrame   = readParquet(s, path(d, "nation"))
+  def customer(s: SparkSession, d: String): DataFrame = readParquet(s, path(d, "customer"))
+  def supplier(s: SparkSession, d: String): DataFrame = readParquet(s, path(d, "supplier"))
+  def part(s: SparkSession, d: String): DataFrame     = readParquet(s, path(d, "part"))
+  def orders(s: SparkSession, d: String): DataFrame   = readParquet(s, path(d, "orders"))
+  def lineitem(s: SparkSession, d: String): DataFrame = readParquet(s, path(d, "lineitem"))
+  def documents(s: SparkSession, d: String): DataFrame = readParquet(s, path(d, "documents"))
+  def embeddings(s: SparkSession, d: String): DataFrame = readParquet(s, path(d, "embeddings"))
+
+  /** `spark.read.parquet(path)` without its schema-inference job.
+    *
+    * A schema-less parquet read makes Spark run one cluster job to read
+    * footers, even for a single file. Without schema merging Spark reads
+    * exactly one footer: a `_common_metadata` summary, else `_metadata`,
+    * else the first data file by path, after its listing drops names that
+    * start with `_` or `.`. This loader reads that same footer in the
+    * calling process, converts it the way Spark does (the Spark schema
+    * stored in the footer, else the parquet-to-Spark converter under the
+    * session's current settings) and hands the result to `read.schema`.
+    *
+    * Everything else takes the plain read, so Spark's own errors and merge
+    * semantics hold exactly: schema merging on, a glob, a missing path, a
+    * directory with no data file or with subdirectories (partitions), and
+    * a footer that does not parse.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None         => spark.read.parquet(path)
+    }
+
+  private val SummaryFiles = Set("_common_metadata", "_metadata")
+
+  // Spark's listing filter (HadoopFSUtils.shouldFilterOutPathName)
+  private def listedName(name: String): Boolean = {
+    val exclude = (name.startsWith("_") && !name.contains("=")) ||
+      name.startsWith(".") || name.endsWith("._COPYING_")
+    !exclude || name.startsWith("_common_metadata") || name.startsWith("_metadata")
+  }
+
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val sqlConf = spark.sessionState.conf
+    if (sqlConf.isParquetSchemaMergingEnabled || path.exists("{}[]*?\\".contains(_)))
+      return None
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    try {
+      val p = new Path(path)
+      val fs = p.getFileSystem(hadoopConf)
+      val root = fs.getFileStatus(p)
+      val listed: Seq[FileStatus] =
+        (if (root.isDirectory) fs.listStatus(p).toSeq else Seq(root))
+          .filter(f => listedName(f.getPath.getName))
+      if (listed.exists(_.isDirectory)) return None
+      val files = listed.sortBy(_.getPath.toString)
+      def named(n: String) = files.find(_.getPath.getName == n)
+      val pick = named("_common_metadata").orElse(named("_metadata"))
+        .orElse(files.find(f => !SummaryFiles(f.getPath.getName)))
+      pick.map { f =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, hadoopConf), SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+          new ParquetToSparkSchemaConverter(sqlConf))
+      }
+    } catch { case NonFatal(_) => None }
+  }
 
   /** Spread a SMALL input across the cluster before a CPU-heavy per-row
     * pipeline (tokenize/shingle/md5 explodes, decimal aggregates, vector
@@ -122,7 +191,7 @@ object Tables {
     // idempotent — nothing observable leaks) keeps the loader correct for
     // arbitrary caller-provided sessions too.
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeEventsTs(s.read.parquet(path(d, "events")))
+    normalizeEventsTs(readParquet(s, path(d, "events")))
   }
 
   /** Normalize the producer-controlled `ts` column to session-UTC

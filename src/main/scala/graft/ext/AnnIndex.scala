@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -203,7 +204,7 @@ object AnnIndex {
     IndexVersion.check(spark, path, markerOf(cents, cb),
       "ANN index (the stored rows were encoded under different centroids/" +
         "codebook than the ones passed — re-encode the index)")
-    spark.read.parquet(path).withColumn("cid", col("cid").cast("long"))
+    Tables.readParquet(spark, path).withColumn("cid", col("cid").cast("long"))
   }
 
   /** Structural fsck for the cell tree: the fingerprint marker matches

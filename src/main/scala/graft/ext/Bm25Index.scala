@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.Tables
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -198,7 +199,7 @@ object Bm25Index {
     val fs = live.getFileSystem(s.sparkContext.hadoopConfiguration)
     graft.sink.DirSwap.heal(fs, live,
       new Path(s"$path/meta.parquet${IndexMaintenance.RetiredSuffix}"))
-    s.read.parquet(s"$path/meta.parquet")
+    Tables.readParquet(s, s"$path/meta.parquet")
   }
 
   /** Replace the meta scalars via staging + atomic-ish promote (the

@@ -383,7 +383,7 @@ object Bpe {
   def writeVocab(words: DataFrame, dir: String): Unit =
     vocabOf(words).write.mode("overwrite").parquet(dir)
 
-  def loadVocab(s: SparkSession, dir: String): DataFrame = s.read.parquet(dir)
+  def loadVocab(s: SparkSession, dir: String): DataFrame = Tables.readParquet(s, dir)
 
   /** Apply a (possibly at-rest) vocab to documents: per-doc token and
     * post-merge symbol counts — the q_text_bpe_apply shape as a library
@@ -520,13 +520,13 @@ object Bpe {
       words.select("w", "enc", "freq")
         .write.mode("overwrite").parquet(s"$dir/words.parquet")
       val s = words.sparkSession
-      fullSymbolIds(s.read.parquet(s"$dir/words.parquet"))
+      fullSymbolIds(Tables.readParquet(s, s"$dir/words.parquet"))
         .write.mode("overwrite").parquet(s"$dir/syms.parquet")
     }
 
   /** Load a stored tokenizer: (word table, symbol-id table). */
   def loadTokenizer(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    (s.read.parquet(s"$dir/words.parquet"), s.read.parquet(s"$dir/syms.parquet"))
+    (Tables.readParquet(s, s"$dir/words.parquet"), Tables.readParquet(s, s"$dir/syms.parquet"))
 
   /** DECODE id sequences back to text (one space-joined token stream per
     * document) — the inverse of [[encodeWith]] over the same id table.

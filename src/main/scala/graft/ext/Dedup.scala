@@ -945,7 +945,7 @@ object Dedup {
           .write.parquet(s"$r/stats_churned.parquet")
         DedupIndex.compact(s, s"$r/tree")
       }
-      s.read.parquet(s"$dir/stats_churned.parquet")
+      Tables.readParquet(s, s"$dir/stats_churned.parquet")
         .unionByName(DedupIndex.stats(s, s"$dir/tree")
           .withColumn("stage", lit("compacted")))
         .select("stage", "band", "n_rows", "n_keys")

@@ -127,11 +127,11 @@ object Dsir {
   def loadTable(spark: org.apache.spark.sql.SparkSession,
                 dir: String): IndexedSeq[Double] = {
     IndexMaintenance.heal(spark, dir)
-    val m = spark.read.parquet(s"$dir/meta.parquet").collect()(0)
+    val m = Tables.readParquet(spark, s"$dir/meta.parquet").collect()(0)
     require(m.getAs[Int]("d") == D,
       s"DSIR table at $dir was built over ${m.getAs[Int]("d")} hash " +
         s"buckets but this engine scores mod $D — retrain the table")
-    val rows = spark.read.parquet(s"$dir/lambda.parquet").collect()
+    val rows = Tables.readParquet(spark, s"$dir/lambda.parquet").collect()
       .map(r => r.getAs[Int]("b") -> r.getAs[Double]("lam")).toMap
     require(rows.size == D, s"DSIR table at $dir holds ${rows.size} of $D " +
       "rows — the artifact is torn; rebuild it")

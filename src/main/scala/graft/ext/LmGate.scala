@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.Tables
 import graft.operators.DistributedRank
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -442,8 +443,8 @@ object LmGate {
         .write.mode("overwrite").parquet(s"$dir/meta.parquet")
       c12.write.mode("overwrite").parquet(s"$dir/c12.parquet")
       c1.write.mode("overwrite").parquet(s"$dir/c1.parquet")
-      val c12r = s.read.parquet(s"$dir/c12.parquet")
-      val c1r = s.read.parquet(s"$dir/c1.parquet")
+      val c12r = Tables.readParquet(s, s"$dir/c12.parquet")
+      val c1r = Tables.readParquet(s, s"$dir/c1.parquet")
       // boundaries train under the SAME scoring serving will dispatch to —
       // the n1f/n1b/(npairs, V2) continuation marginals a kneser gate
       // needs derive from the PERSISTED c12 at serve time (they are c12
@@ -485,7 +486,7 @@ object LmGate {
 
   def load(s: SparkSession, dir: String): Gate = {
     IndexMaintenance.heal(s, dir)
-    val bs = s.read.parquet(s"$dir/bounds.parquet")
+    val bs = Tables.readParquet(s, s"$dir/bounds.parquet")
       .collect()
       .sortBy(_.getAs[Int]("bucket_idx"))
       .map(r => (r.getAs[Double]("b_score"), r.getAs[Long]("b_id")))
@@ -500,7 +501,7 @@ object LmGate {
     val (mode, maxBigrams, vsz, knD) =
       if (!fs.exists(metaPath)) (Mode.Mle: Mode, 0, -1L, -1L)
       else {
-        val meta = s.read.parquet(s"$dir/meta.parquet")
+        val meta = Tables.readParquet(s, s"$dir/meta.parquet")
         val row = meta.collect().head
         // pre-cap artifacts (written before the maxBigrams option) have no
         // max_bigrams column; genuine absence reads as uncapped
@@ -524,7 +525,7 @@ object LmGate {
           else -1L
         (m, cap, stamp("vsz"), stamp("kn_denom"))
       }
-    Gate(s.read.parquet(s"$dir/c12.parquet"),
-      s.read.parquet(s"$dir/c1.parquet"), bs, mode, maxBigrams, vsz, knD)
+    Gate(Tables.readParquet(s, s"$dir/c12.parquet"),
+      Tables.readParquet(s, s"$dir/c1.parquet"), bs, mode, maxBigrams, vsz, knD)
   }
 }

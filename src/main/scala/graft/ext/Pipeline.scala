@@ -240,7 +240,7 @@ object Pipeline {
       val banded = Dedup.mhBandedDf(s, d).transform(graft.CacheTracker.cached)
 
       // the four corpus artifacts (what a steady-state corpus has on disk)
-      LmGate.write(corpus, s"$r/gate",
+      LmGate.write(corpus, s"$r/gate", buckets = Sharding.CurriculumPhases,
         mode = LmGate.Mode.Addone, maxBigrams = GateCap)
       DedupIndex.write(banded.filter(!inBatchStream), s"$r/dedup")
       SubstringIndex.write(corpus, s"$r/substr")
@@ -253,7 +253,7 @@ object Pipeline {
         admit(if (qualityGate) Some(gate) else None, batch,
           banded.filter(pred), s"$r/dedup", s"$r/substr",
           s"$r/admitted${i + 1}.parquet")
-        val admittedIds = s.read.parquet(s"$r/admitted${i + 1}.parquet")
+        val admittedIds = Tables.readParquet(s, s"$r/admitted${i + 1}.parquet")
         val admitted = batch.join(admittedIds, Seq("doc_id"))
         // FOLD: O(batch) appends — the band keys the NEXT cycle's novelty
         // probe must see, the windows its decontam probe must see, the
@@ -270,7 +270,7 @@ object Pipeline {
       // q_sample_curriculum construction), shards dealt round-robin by
       // curriculum position and written one file per shard in order
       val admittedAll = cyclePreds.indices
-        .map(i => s.read.parquet(s"$r/admitted${i + 1}.parquet"))
+        .map(i => Tables.readParquet(s, s"$r/admitted${i + 1}.parquet"))
         .reduce(_ unionByName _)
       val all = corpus.unionByName(
         docs.join(admittedAll, Seq("doc_id")))
@@ -283,7 +283,7 @@ object Pipeline {
       // corpus again, not the stale cut points of the original.
       val servingGate =
         if (refreshGate) {
-          LmGate.refresh(all, s"$r/gate",
+          LmGate.refresh(all, s"$r/gate", buckets = Sharding.CurriculumPhases,
             mode = LmGate.Mode.Addone, maxBigrams = GateCap)
           LmGate.load(s, s"$r/gate")
         } else gate
@@ -295,7 +295,7 @@ object Pipeline {
       // same composite (phase, uniform-hash) key as the curriculum
       // report → same literal thresholds, no percentile pass (r18)
       DistributedRank.rankDescWithThresholds(keyed, "neg_key", "doc_id",
-        Sharding.phaseHashThresholds(s, 3), "rk")
+        Sharding.phaseHashThresholds(s), "rk")
         .select(col("doc_id"), (col("rk") - 1).as("rk0"))
         .select(col("doc_id"),
           pmod(col("rk0"), lit(Shards)).cast("int").as("shard"),
@@ -320,7 +320,7 @@ object Pipeline {
     val bandKeys = DedupIndex.load(s, s"$root/dedup")
       .select("band", "k1", "k2").distinct()
       .agg(count(lit(1)).as("band_keys"))
-    s.read.parquet(s"$root/shards/epoch1")
+    Tables.readParquet(s, s"$root/shards/epoch1")
       .groupBy(col("shard").cast("int").as("shard"))
       .agg(count(lit(1)).as("n_docs"),
         Sharding.sigSum(col("doc_id"), col("pos")).as("order_sig"),

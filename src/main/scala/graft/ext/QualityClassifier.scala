@@ -208,12 +208,12 @@ object QualityClassifier {
   def loadModel(spark: org.apache.spark.sql.SparkSession,
                 dir: String): (IndexedSeq[Double], Double) = {
     IndexMaintenance.heal(spark, dir)
-    val m = spark.read.parquet(s"$dir/meta.parquet").collect()(0)
+    val m = Tables.readParquet(spark, s"$dir/meta.parquet").collect()(0)
     require(m.getAs[Int]("d") == D,
       s"classifier model at $dir was trained over ${m.getAs[Int]("d")} " +
         s"hash buckets but this engine scores mod $D — every feature " +
         "would mis-route; retrain the model")
-    val rows = spark.read.parquet(s"$dir/weights.parquet").collect()
+    val rows = Tables.readParquet(spark, s"$dir/weights.parquet").collect()
       .map(r => r.getAs[Int]("b") -> r.getAs[Double]("w")).toMap
     require(rows.size == D, s"classifier model at $dir holds ${rows.size} " +
       s"of $D weight rows — the artifact is torn; retrain the model")

@@ -191,7 +191,7 @@ object Sharding {
       val root = StoredArtifacts.of(s"shards|$d") { r =>
         writeShards(Tables.documents(s, d), "e1#", Shards, s"$r/epoch1")
       }
-      s.read.parquet(s"$root/epoch1")
+      Tables.readParquet(s, s"$root/epoch1")
         .groupBy(col("shard").cast("int").as("shard"))
         .agg(count(lit(1)).as("n_docs"),
           min(when(col("pos") === 0, col("doc_id"))).as("first_doc"),
@@ -225,7 +225,7 @@ object Sharding {
       val scored = LmGate.scoreSmoothed(docs, c12, c1)
         .select(col("doc_id"), col("avg_logprob"))
       val phased = DistributedRank
-        .ntileDesc(scored, "avg_logprob", "doc_id", 3, "phase")
+        .ntileDesc(scored, "avg_logprob", "doc_id", CurriculumPhases, "phase")
         .select(col("doc_id"), col("phase"))
       curriculumReport(phased)
     },
@@ -249,7 +249,8 @@ object Sharding {
     Q("q_sample_curriculum_stored", curriculumOracleSql) { (s, d) =>
       val docs = Tables.documents(s, d)
       val root = StoredArtifacts.of(s"curriculum-gate|$d") { r =>
-        LmGate.write(docs, r, mode = LmGate.Mode.Addone, maxBigrams = 500)
+        LmGate.write(docs, r, buckets = CurriculumPhases,
+          mode = LmGate.Mode.Addone, maxBigrams = 500)
       }
       val phased = LmGate.load(s, root).bucketed(docs)
         .select(col("doc_id"), col("bucket").as("phase"))
@@ -287,6 +288,27 @@ object Sharding {
     }
   )
 
+  /** The number of curriculum difficulty phases (terciles). Every phase
+    * assignment (the ntile, the stored gate's bucket count) and the rank
+    * thresholds of [[phaseHashThresholds]] derive from this one constant.
+    */
+  private[ext] val CurriculumPhases = 3
+
+  /** Literal range-group thresholds for the composite curriculum key
+    * `-(phase·2⁴⁹ + h)`: within each phase the key is a uniform 48-bit
+    * hash, so per-phase equal-width cuts balance groups exactly like the
+    * percentile sketch they replace (whose action + full input pass are
+    * skipped — r18, guide §1.2). Rows with a phase beyond
+    * [[CurriculumPhases]] would merely share the last group — thresholds
+    * never affect correctness.
+    */
+  private[ext] def phaseHashThresholds(s: org.apache.spark.sql.SparkSession): Seq[Double] = {
+    val p = s.conf.get("spark.sql.shuffle.partitions", "32").toInt.max(1)
+    val g = math.max(1, p / CurriculumPhases)
+    for { ph <- 1 to CurriculumPhases; j <- 0 until g }
+      yield -(ph.toDouble * (1L << 49) + (1L << 48).toDouble * j / g)
+  }
+
   /** The within-phase shuffle + per-phase report shared by the two
     * curriculum faces: from `(doc_id, phase)` the full curriculum
     * position is ONE global rank over the composite (phase, h) key —
@@ -295,21 +317,6 @@ object Sharding {
     * single-partition sort. min/max positions prove the phases tile the
     * order contiguously; order_sig pins the full doc→position assignment.
     */
-  /** Literal range-group thresholds for the composite curriculum key
-    * `-(phase·2⁴⁹ + h)`: within each phase the key is a uniform 48-bit
-    * hash, so per-phase equal-width cuts balance groups exactly like the
-    * percentile sketch they replace (whose action + full input pass are
-    * skipped — r18, guide §1.2). Rows with a phase beyond `phases` would
-    * merely share the last group — thresholds never affect correctness.
-    */
-  private[ext] def phaseHashThresholds(s: org.apache.spark.sql.SparkSession,
-                                       phases: Int): Seq[Double] = {
-    val p = s.conf.get("spark.sql.shuffle.partitions", "32").toInt.max(1)
-    val g = math.max(1, p / phases)
-    for { ph <- 1 to phases; j <- 0 until g }
-      yield -(ph.toDouble * (1L << 49) + (1L << 48).toDouble * j / g)
-  }
-
   private def curriculumReport(phased: DataFrame): DataFrame = {
     val keyed = phased
       .select(col("doc_id"), col("phase"),
@@ -317,7 +324,7 @@ object Sharding {
       .select(col("doc_id"), col("phase"),
         (-(col("phase").cast("long") * lit(1L << 49) + col("h"))).as("neg_key"))
     DistributedRank.rankDescWithThresholds(keyed, "neg_key", "doc_id",
-        phaseHashThresholds(phased.sparkSession, 3), "rk")
+        phaseHashThresholds(phased.sparkSession), "rk")
       .select(col("doc_id"), col("phase"), (col("rk") - 1).as("rk0"))
       .groupBy("phase")
       .agg(count(lit(1)).as("n_docs"),
@@ -359,7 +366,7 @@ object Sharding {
          |  CROSS JOIN v GROUP BY doc_id
          |),
          |phased AS (
-         |  SELECT doc_id, ntile(3) OVER (ORDER BY s DESC, doc_id) AS phase,
+         |  SELECT doc_id, ntile($CurriculumPhases) OVER (ORDER BY s DESC, doc_id) AS phase,
          |    ${h48Sql("'c1#' || CAST(doc_id AS VARCHAR)")} AS h
          |  FROM scored
          |),

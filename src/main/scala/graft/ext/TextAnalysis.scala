@@ -114,7 +114,7 @@ object TextAnalysis {
   }
 
   def loadBloomBits(s: SparkSession, dir: String): Seq[Long] =
-    s.read.parquet(dir).collect().map(_.getLong(0)).toSeq
+    Tables.readParquet(s, dir).collect().map(_.getLong(0)).toSeq
 
   /** Score a corpus shingle stream against a (possibly at-rest) Bloom
     * bit-position artifact — the serving face of the

@@ -80,6 +80,7 @@ object Compaction {
     // a column) would be rewritten — and promoted — WITHOUT the newer
     // column: permanent silent data loss. Merging unions the fields (old
     // rows read null for added columns, the normal evolution semantics).
+    // Hence the plain Spark read here, not Tables.readParquet (one footer).
     spark.read.option("mergeSchema", "true").parquet(path)
       .repartition(target)
       .write.parquet(staging.toString)

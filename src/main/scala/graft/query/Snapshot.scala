@@ -12,6 +12,10 @@ import org.apache.spark.sql.SparkSession
 object Snapshot {
 
   /** Register every table under `<base>/current` as a temp view.
+    *
+    * Each table's schema comes from one parquet footer read in the calling
+    * process ([[graft.Tables.readParquet]]), so mounting a snapshot runs no
+    * Spark job; the first job is the first query on a view.
     * @return the registered table names (empty if no snapshot exists)
     */
   def register(spark: SparkSession, base: String): Seq[String] = {
@@ -20,7 +24,7 @@ object Snapshot {
     if (!fs.exists(current)) return Seq.empty
     val tables = fs.listStatus(current).filter(_.isDirectory).map(_.getPath.getName).toSeq.sorted
     tables.foreach { t =>
-      spark.read.parquet(s"$base/current/$t").createOrReplaceTempView(t)
+      graft.Tables.readParquet(spark, s"$base/current/$t").createOrReplaceTempView(t)
     }
     tables
   }

@@ -99,7 +99,7 @@ final case class SqliteSnapshotCommit(cfg: SqliteDestination, runId: String,
     val writer = new SqliteDbWriter(tmp)
     try {
       tables.sorted.foreach { t =>
-        val df = spark.read.parquet(s"$stagingDir/$t")
+        val df = graft.Tables.readParquet(spark, s"$stagingDir/$t")
         val tw = writer.table(t, SqliteDdl.createTable(t, df.schema))
         val it = df.toLocalIterator()
         while (it.hasNext) {

@@ -35,7 +35,7 @@ object StreamingOps {
     // directories are the producer's contract to avoid: one stream reads
     // ONE schema; re-create the stream when the producer shape changes.
     val producerSchema =
-      try spark.read.parquet(path).schema
+      try graft.Tables.readParquet(spark, path).schema
       catch { case _: org.apache.spark.sql.AnalysisException =>
         // LOUD fallback: construction succeeded on an assumption — if the
         // producer then lands a different ts shape (e.g. the ≤r7
