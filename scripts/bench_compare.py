@@ -9,8 +9,19 @@ before calling them regressions).
 """
 import json, sys, statistics
 
-new = json.load(open(sys.argv[1]))
-old = json.load(open(sys.argv[2]))
+def load(path):
+    d = json.load(open(path))
+    if "queries" not in d:
+        # Bench's compact stdout line carries only the headline fields and
+        # names the file that holds the per-query seconds
+        sys.exit(f"{path} has no per-query times (Bench's compact stdout "
+                 f"line?); pass the file it names instead: "
+                 f"{d.get('file', 'SPARK_GRAFT_BENCH_OUT / bench_out.json')}")
+    return d
+
+
+new = load(sys.argv[1])
+old = load(sys.argv[2])
 thr = float(sys.argv[3]) if len(sys.argv) > 3 else 1.5
 nq, oq = new["queries"], old["queries"]
 shared = sorted(set(nq) & set(oq))

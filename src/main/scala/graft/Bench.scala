@@ -1,11 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import java.nio.file.{Files, Paths}
 
 /** Benchmark main: times every declared query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Queries are forced end-to-end with the noop sink
   * (all columns materialized — `count()` would let Catalyst prune the
-  * projection and under-report).
+  * projection and under-report), inside a CacheTracker scope
+  * ([[Harness.scopedNoop]]).
   *
   * Reproducibility: each query is timed SPARK_GRAFT_REPS times (default 3)
   * and the per-query MEDIAN is reported — single-shot timings on a shared
@@ -13,25 +16,26 @@ import org.apache.spark.sql.SparkSession
   * regions the cache is dropped and a full GC is requested so one query's
   * garbage (cached LSH signature tables) is never attributed to the next.
   *
+  * Each query also carries the Spark counters of its median rep (the
+  * faster of the middle pair for even rep counts): jobs, stages, tasks,
+  * task seconds, GC seconds and shuffle MB written ([[JobCounter]]).
+  *
   * Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_REPS,
-  * SPARK_GRAFT_ONLY (comma-separated query-name filter, for iterating).
+  * SPARK_GRAFT_ONLY (comma-separated query-name filter, for iterating),
+  * SPARK_GRAFT_BENCH_TIMEOUT_SEC (per-rep watchdog, default 300),
+  * SPARK_GRAFT_BENCH_OUT (the per-query file, default bench_out.json) and
+  * SPARK_GRAFT_PLANS (a directory: after its timed reps each passing query
+  * runs once more, untimed, and writes `<dir>/<query>.txt`, its
+  * `explain("formatted")` plan).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts INT64(NANOS)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_TIMEOUT_SEC", "300").toLong
+    val planDir = sys.env.get("SPARK_GRAFT_PLANS")
+    val keep = Harness.only(SparkEntry.queries.keySet)
+    val spark = Harness.session("graft-bench")
 
     // JVM/codegen warmup outside the timed region (steady-state throughput
     // is the comparison target, not first-query JIT cost). A warmup failure
@@ -40,114 +44,74 @@ object Bench {
     try { Tables.lineitem(spark, sfDir).count(); Tables.events(spark, sfDir).count() }
     catch { case e: Throwable => System.err.println(s"[bench] warmup failed: $e") }
 
-    // a typo'd SPARK_GRAFT_ONLY name must fail loudly — silently timing
-    // zero queries produces a valid-looking empty artifact
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"unknown query name(s) in SPARK_GRAFT_ONLY: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-
-    // Watchdog: a hung query would otherwise stall the WHOLE artifact
-    // (sequential timing loop) — cancel its job group after the budget
-    // and record it as failed, so one pathological plan costs one entry,
-    // not the round's bench.
-    val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_TIMEOUT_SEC", "300").toLong
-    val watchdog = java.util.concurrent.Executors.newSingleThreadScheduledExecutor { r =>
-      val t = new Thread(r, "bench-watchdog"); t.setDaemon(true); t
-    }
-
-    // (elapsed, succeeded): a query that throws must never masquerade as a
-    // fast measurement — r8's BENCH json recorded 3 analysis-error times as
-    // "4-7x wins" because failures were swallowed here
-    // Job-group names are unique PER REP: the sticky
-    // cancelJobGroupAndFutureJobs on a name reused across reps would — if
-    // the watchdog fired in the race window between a rep finishing under
-    // budget and kill.cancel() landing — insta-cancel every remaining rep
-    // of the query and record a healthy-but-slow query as failed. A stale
-    // cancel on a per-rep name targets a group that will never run again.
-    val repSeq = new java.util.concurrent.atomic.AtomicLong(0)
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
-      val t0 = System.nanoTime()
-      val group = s"bench-$name-${repSeq.incrementAndGet()}"
-      spark.sparkContext.setJobGroup(group, name, interruptOnCancel = true)
-      val kill = watchdog.schedule(new Runnable {
-        def run(): Unit = {
-          System.err.println(s"[bench] $name TIMED OUT after $timeoutSec s — cancelling")
-          // AndFutureJobs — plain cancelJobGroup is not sticky (see Verify)
-          spark.sparkContext.cancelJobGroupAndFutureJobs(group)
-        }
-      }, timeoutSec, java.util.concurrent.TimeUnit.SECONDS)
-      // The timed region runs under a CacheTracker scope, exactly like
-      // Verify and the engine Runner execute queries: builders route
-      // intra-query caches through cachedInScope, which is a PASSTHROUGH
-      // outside a scope — un-scoped, every such cache silently degrades
-      // to recompute-per-consumer (e.g. the capped bigram model is
-      // re-derived three times per curriculum run) and the bench measures
-      // a plan shape no runner ever executes. Fixed in r17 — a
-      // measurement-methodology alignment, disclosed in
-      // OPTIMIZATION_r17.md; the scope also releases those caches at
-      // region end (the clearCache below stays as the cross-rep sweep).
-      val ok =
-        try {
-          CacheTracker.scope {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          }
-          true
-        }
-        catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); false }
-        finally { kill.cancel(false); spark.sparkContext.clearJobGroup() }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // drop intra-query caches NOW (blocking) and collect the garbage
-      // outside the next timed region — otherwise unpersist runs async and
-      // the GC pause lands on whichever query runs next
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      System.gc()
-      (dt, ok)
-    }
+    val queries = SparkEntry.queries.toSeq.sortBy(_._1).filter(kv => keep(kv._1))
+    planDir.foreach(d => Files.createDirectories(Paths.get(d)))
+    val counter = new JobCounter(spark)
 
     val results = queries.map { case (name, fn) =>
-      val runs = (1 to reps).map(_ => once(name, fn))
-      val ok = runs.forall(_._2)
-      val times = runs.map(_._1).sorted
+      val runs = (1 to reps).map { rep =>
+        val group = s"bench-$name-$rep"
+        val t = once(spark, group, timeoutSec)(fn(spark, sfDir))
+        Harness.release(spark)
+        (group, t)
+      }
+      val times = runs.collect { case (g, Some(t)) => (t, g) }.sortBy(_._1)
+      val ok = times.size == reps
       val n = times.size
       // true median: average the middle pair for even rep counts (picking
       // the upper-middle would report the WORSE of 2 runs as the "median")
-      val med = if (n % 2 == 1) times(n / 2) else (times(n / 2 - 1) + times(n / 2)) / 2
+      val med = if (n == 0) 0.0
+        else if (n % 2 == 1) times(n / 2)._1 else (times(n / 2 - 1)._1 + times(n / 2)._1) / 2
       // per-query progress on stderr: a killed/timed-out run still leaves
       // every finished median on record (the stdout JSON line would be lost)
-      System.err.println(f"[bench] $name $med%.3f s (reps=${times.map(t => f"$t%.2f").mkString(",")})"
-        + (if (ok) "" else " FAILED"))
-      (name, med, ok)
+      System.err.println(
+        f"[bench] $name $med%.3f s (reps=${runs.map(_._2.fold("failed")(t => f"$t%.2f")).mkString(",")})"
+          + (if (ok) "" else " FAILED"))
+      if (ok) planDir.foreach { d =>
+        try Files.writeString(Paths.get(d, s"$name.txt"),
+          Harness.guarded(spark, s"bench-$name-plan", timeoutSec)(Harness.scopedPlan(fn(spark, sfDir))))
+        catch { case e: Throwable => System.err.println(s"[bench] $name plan failed: $e") }
+        Harness.release(spark)
+      }
+      (name, med, ok, if (n == 0) "" else times((n - 1) / 2)._2)
     }
     // failed queries are EXCLUDED from the per-query map and the total (a
     // failure time is not a throughput number) and listed by name instead
-    val good = results.collect { case (n, t, true) => (n, t) }
-    val failed = results.collect { case (n, _, false) => n }
-    val qs = good.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
+    val good = results.collect { case (n, t, true, g) => (n, t, g) }
+    val failed = results.collect { case (n, _, false, _) => n }
+    val qs = good.map { case (k, v, _) => Harness.jsonStr(k) + ":" + f"$v%.3f" }
       .mkString("{", ",", "}")
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val counters = good.map { case (k, _, g) => Harness.jsonStr(k) + ":" + counter(g).json }
+      .mkString("{", ",", "}")
+    counter.close()
+    val failedJson = failed.map(Harness.jsonStr).mkString("[", ",", "]")
     val total = f"${good.map(_._2).sum}%.3f"
     // exit 0 even with failures: the driver consumes the stdout JSON line,
     // and a nonzero exit could zero the whole round's bench artifact — the
     // "failed" field is the loud signal.
-    // The full line (every query's seconds) goes to a file
+    // The full line (every query's seconds and counters) goes to a file
     // (SPARK_GRAFT_BENCH_OUT, default bench_out.json in cwd), the durable
     // per-query ground truth. stdout gets exactly one JSON line, the last
     // one: a compact (<1 KB) object with the headline fields and a pointer
     // to the file, so a consumer that keeps only the tail of stdout always
     // ends with one complete object. The failed list is capped at 10 names
     // to keep the line bounded (n_failed carries the true count).
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":${Verify.jsonStr(sfDir)},"n_queries":${good.size}}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"counters":$counters,"failed":$failedJson,"sf":${Harness.jsonStr(sfDir)},"n_queries":${good.size}}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (fullLine + "\n").getBytes("UTF-8"))
+    try Files.write(Paths.get(outPath), (fullLine + "\n").getBytes("UTF-8"))
     catch { case e: Throwable => System.err.println(s"[bench] could not write $outPath: $e") }
-    val failedCompact = failed.take(10).map("\"" + _ + "\"").mkString("[", ",", "]")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${good.size},"failed":$failedCompact,"n_failed":${failed.size},"sf":${Verify.jsonStr(sfDir)},"file":${Verify.jsonStr(outPath)}}""")
+    val failedCompact = failed.take(10).map(Harness.jsonStr).mkString("[", ",", "]")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${good.size},"failed":$failedCompact,"n_failed":${failed.size},"sf":${Harness.jsonStr(sfDir)},"file":${Harness.jsonStr(outPath)}}""")
     spark.stop()
   }
+
+  /** One timed rep under job group `group` (unique per rep, see
+    * [[Harness.guarded]]): the wall seconds of the scoped noop run, or None
+    * when it threw or the watchdog cancelled it — a failure must never
+    * masquerade as a fast measurement.
+    */
+  private[graft] def once(spark: SparkSession, group: String, timeoutSec: Long)(
+      build: => DataFrame): Option[Double] =
+    try Some(Harness.seconds(Harness.guarded(spark, group, timeoutSec)(Harness.scopedNoop(build))))
+    catch { case e: Throwable => System.err.println(s"[bench] $group failed: $e"); None }
 }

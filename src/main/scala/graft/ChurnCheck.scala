@@ -1,7 +1,7 @@
 package graft
 
 import graft.ext.{Bm25Index, Dedup, DedupIndex, SubstringIndex}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Append-churn scale instrument: the declared append rows prove ONE
@@ -21,34 +21,36 @@ import org.apache.spark.sql.functions._
   * subquery — the 100×-observed OOM) — against the same probe with the
   * default broadcast at this bounded scale, recording both times.
   *
+  * Probes, searches and backfills are timed as [[Harness.scopedNoop]] runs,
+  * min of SPARK_GRAFT_REPS (the ScaleCheck estimator). The churn fixtures
+  * (the banded corpus and the probe batch) stay cached for the whole run,
+  * so between reps only garbage is collected — the scope already released
+  * each run's own caches. A compaction rewrites the tree it measures, so
+  * it is timed once: a second rep would compact an already compacted tree.
+  *
   * Usage: `sbt "runMain graft.ChurnCheck [sfDir]"`, knobs SPARK_GRAFT_CPUS
-  * / SPARK_GRAFT_REPS (min-of-reps, the ScaleCheck estimator). Prints one
-  * JSON line (merged into SCALING.json as the `append_churn` block).
+  * / SPARK_GRAFT_REPS. Prints one JSON line (`scripts/measure.sh churn`;
+  * merged into SCALING.json as the `append_churn` block).
   */
 object ChurnCheck {
+  private val Batches = 10
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    val batches = sys.env.getOrElse("SPARK_GRAFT_CHURN_BATCHES", "10").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-churn")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("graft-churn")
 
-    def timed(fn: => Unit): Double =
+    def timed(build: => DataFrame): Double =
       (1 to reps).map { _ =>
-        spark.sparkContext.getPersistentRDDs // no-op touch
-        val t0 = System.nanoTime()
-        fn
-        (System.nanoTime() - t0) / 1e9
+        val dt = Harness.seconds(Harness.scopedNoop(build))
+        System.gc()
+        dt
       }.min
+    def timedOnce(body: => Unit): Double = {
+      val dt = Harness.seconds(CacheTracker.scope(body))
+      System.gc()
+      dt
+    }
 
     def dataFiles(p: String): Int = {
       def walk(f: java.io.File): Seq[java.io.File] =
@@ -68,17 +70,15 @@ object ChurnCheck {
     probeBatch.count()
     val dedupDir = fresh("dedup")
     DedupIndex.write(banded.filter(pmod(col("doc_id"), lit(12)) < 2), dedupDir)
-    val dedupCurve = (0 until batches).map { i =>
+    val dedupCurve = (0 until Batches).map { i =>
       DedupIndex.append(
         banded.filter(pmod(col("doc_id"), lit(12)) === i + 2), dedupDir)
-      val t = timed {
-        DedupIndex.probe(DedupIndex.load(spark, dedupDir), probeBatch).count(): Unit
-      }
+      val t = timed(DedupIndex.probe(DedupIndex.load(spark, dedupDir), probeBatch))
       (t, dataFiles(dedupDir))
     }
-    val tDedupCompact = timed { DedupIndex.compact(spark, dedupDir) }
+    val tDedupCompact = timedOnce(DedupIndex.compact(spark, dedupDir))
     val dedupAfter = (
-      timed { DedupIndex.probe(DedupIndex.load(spark, dedupDir), probeBatch).count(): Unit },
+      timed(DedupIndex.probe(DedupIndex.load(spark, dedupDir), probeBatch)),
       dataFiles(dedupDir))
 
     // ---- BM25 churn: same slicing, search latency after each append ----
@@ -86,17 +86,15 @@ object ChurnCheck {
     val terms = Seq("vector", "stream", "window", "merge")
     val bmDir = fresh("bm25")
     Bm25Index.write(docs.filter(pmod(col("doc_id"), lit(12)) < 2), bmDir)
-    val bmCurve = (0 until batches).map { i =>
+    val bmCurve = (0 until Batches).map { i =>
       Bm25Index.append(
         docs.filter(pmod(col("doc_id"), lit(12)) === i + 2), bmDir)
-      val t = timed {
-        Bm25Index.search(Bm25Index.load(spark, bmDir), terms, 20).collect(): Unit
-      }
+      val t = timed(Bm25Index.search(Bm25Index.load(spark, bmDir), terms, 20))
       (t, dataFiles(s"$bmDir/postings.parquet"))
     }
-    val tBmCompact = timed { Bm25Index.compact(spark, bmDir) }
+    val tBmCompact = timedOnce(Bm25Index.compact(spark, bmDir))
     val bmAfter = (
-      timed { Bm25Index.search(Bm25Index.load(spark, bmDir), terms, 20).collect(): Unit },
+      timed(Bm25Index.search(Bm25Index.load(spark, bmDir), terms, 20)),
       dataFiles(s"$bmDir/postings.parquet"))
 
     // ---- substring backfill: corpus-sized re-check, both join modes ----
@@ -104,19 +102,15 @@ object ChurnCheck {
     SubstringIndex.write(docs.filter(col("doc_id") % 2 === 0), subDir)
     val subIdx = SubstringIndex.load(spark, subDir)
     val backfill = docs.filter(col("doc_id") % 2 =!= 0)
-    val tNoBc = timed {
-      SubstringIndex.probe(subIdx, backfill, broadcastBatch = false).count(): Unit
-    }
-    val tBc = timed {
-      SubstringIndex.probe(subIdx, backfill).count(): Unit
-    }
+    val tNoBc = timed(SubstringIndex.probe(subIdx, backfill, broadcastBatch = false))
+    val tBc = timed(SubstringIndex.probe(subIdx, backfill))
 
     def curveJson(c: Seq[(Double, Int)]): String =
       c.map { case (t, f) => s"""{"sec":${fmt(t)},"files":$f}""" }
         .mkString("[", ",", "]")
     println(
-      s"""{"kind":"append_churn","sf":"$sfDir","reps":$reps,"stat":"min",""" +
-      s""""batches":$batches,""" +
+      s"""{"kind":"append_churn","sf":${Harness.jsonStr(sfDir)},"reps":$reps,"stat":"min",""" +
+      s""""batches":$Batches,""" +
       s""""dedup":{"after_each_append":${curveJson(dedupCurve)},""" +
       s""""compact_sec":${fmt(tDedupCompact)},""" +
       s""""after_compact":{"sec":${fmt(dedupAfter._1)},"files":${dedupAfter._2}}},""" +

@@ -1,7 +1,7 @@
 package graft
 
 import graft.ext.Similarity
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,11 +22,9 @@ import org.apache.spark.sql.functions._
   * structure to exploit), so these curves are lower bounds; planted
   * near-dup recall is property-tested separately in SimilaritySpec.
   *
-  * Usage: `sbt "runMain graft.RecallCurve [sfDir]"` — one JSON line on
-  * stdout (saved as RECALL.json in the repo root; regenerate with
-  * `sbt -batch "runMain graft.RecallCurve" 2>&1 | grep '{"sf"' | tail -1
-  * | sed 's/^\[info\] //' > RECALL.json` — sbt prefixes stdout lines
-  * with `[info] `).
+  * Usage: `sbt "runMain graft.RecallCurve [sfDir]"` — one JSON line, last
+  * on stdout (saved as RECALL.json in the repo root; regenerate with
+  * `scripts/measure.sh recall <outdir>`).
   */
 object RecallCurve {
   private val K = 10
@@ -46,16 +44,7 @@ object RecallCurve {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-recall-curve")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("graft-recall-curve")
 
     val v = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -89,7 +78,7 @@ object RecallCurve {
     val points = scala.collection.mutable.ArrayBuffer[String]()
     def record(method: String, param: String, recall: Double, candFrac: Double): Unit = {
       System.err.println(f"[recall] $method $param recall=$recall%.3f cand_frac=$candFrac%.4f")
-      points += f"""{"method":"$method","param":"$param","recall":$recall%.4f,"cand_frac":$candFrac%.4f}"""
+      points += f"""{"method":${Harness.jsonStr(method)},"param":${Harness.jsonStr(param)},"recall":$recall%.4f,"cand_frac":$candFrac%.4f}"""
     }
     record("brute_force", "-", 1.0, (corpusN - 1).toDouble / corpusN)
 
@@ -231,7 +220,7 @@ object RecallCurve {
     }
     index.unpersist()
 
-    println(s"""{"sf":${Verify.jsonStr(sfDir)},"k":$K,"n_probes":${truth.size},"corpus":$corpusN,""" +
+    println(s"""{"sf":${Harness.jsonStr(sfDir)},"k":$K,"n_probes":${truth.size},"corpus":$corpusN,""" +
       s""""points":[${points.mkString(",")}]}""")
     spark.stop()
   }

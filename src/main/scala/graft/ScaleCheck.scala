@@ -29,10 +29,16 @@ import org.apache.spark.sql.functions._
   * measures the same operator with the stride √N-scaled, which is the
   * configuration a 10× corpus would actually run.
   *
+  * Every timed body is a [[Harness.scopedNoop]] run, followed by the
+  * [[Harness.release]] sweep (the knn_ann section keeps its index cached
+  * across reps and sweeps after its last one).
+  *
   * Usage: `sbt "runMain graft.ScaleCheck [srcDir] [workDir]"`, knobs
   * SPARK_GRAFT_SCALE_COPIES (default 10), SPARK_GRAFT_REPS (default 2),
-  * SPARK_GRAFT_CPUS. Results land on stdout as one JSON line (saved as
-  * SCALING.json in the repo root).
+  * SPARK_GRAFT_CPUS, SPARK_GRAFT_ONLY (query names plus the section names
+  * kmeans, substr_index, bpe_rounds, knn_ann, or `__none__` for a
+  * synthesize-only run). Results land on stdout as one JSON line
+  * (`scripts/measure.sh scaling`; merged into SCALING.json).
   */
 object ScaleCheck {
   private val Queries = Seq(
@@ -180,31 +186,11 @@ object ScaleCheck {
     val base = if (args.length > 1) args(1) else "/tmp/graft-scale"
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // comma-separated query filter (plus the pseudo-names for the extra
-    // sections, and the literal "__none__" for a synthesize-only run) —
-    // large-copies runs target the linear-family queries without paying
-    // for the whole list. Unknown names fail LOUDLY (same hardening as
-    // Bench's SPARK_GRAFT_ONLY): a typo'd filter would otherwise time
-    // zero of that query and emit a valid-looking but incomplete artifact.
-    val pseudo = Set("kmeans", "substr_index", "bpe_rounds", "knn_ann", "__none__")
-    val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY").map(_.split(",").toSet)
-    only.foreach { names =>
-      val unknown = names -- Queries.toSet -- pseudo
-      require(unknown.isEmpty,
-        s"unknown name(s) in SPARK_GRAFT_SCALE_ONLY: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    def keep(name: String): Boolean = only.forall(_.contains(name))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-check")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // large-copies runs target a few queries or sections without paying
+    // for the whole list
+    val keep = Harness.only(
+      Queries.toSet ++ Set("kmeans", "substr_index", "bpe_rounds", "knn_ann", "__none__"))
+    val spark = Harness.session("graft-scale-check")
 
     val d1 = s"$base/x1"
     val dN = s"$base/x$copies"
@@ -214,21 +200,15 @@ object ScaleCheck {
     Tables.documents(spark, dN).count()
     Tables.embeddings(spark, dN).count()
 
-    def timeMin(body: => Unit): Double =
+    // `between` runs after each rep, outside its timed region
+    def timeMin(build: => DataFrame, between: => Unit = Harness.release(spark)): Double =
       (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        body
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-        System.gc()
+        val dt = Harness.seconds(Harness.scopedNoop(build))
+        between
         dt
       }.min
 
-    def run(name: String, dir: String): Double = {
-      val fn = SparkEntry.queries(name)
-      timeMin(fn(spark, dir).write.format("noop").mode("overwrite").save())
-    }
+    def run(name: String, dir: String): Double = timeMin(SparkEntry.queries(name)(spark, dir))
 
     val perQuery = Queries.filter(keep).map { q =>
       val t1 = run(q, d1)
@@ -246,7 +226,6 @@ object ScaleCheck {
       val refined = ext.Similarity.refineCentroids(
         v, ext.Similarity.centroidSet(v, stride), rounds = 2)
       ext.Similarity.ivfTopKWith(v, refined, col("vec_id") < 20, nprobe = 2, k = 1)
-        .write.format("noop").mode("overwrite").save()
     }
     val kmeansJson = if (!keep("kmeans")) None else {
       val k1 = kmeansAt(d1, 25)
@@ -284,10 +263,7 @@ object ScaleCheck {
         // copy 0 keeps original doc ids: the same 20 probe docs exist at
         // every size, so the batch is constant while the corpus grows
         val batch = docs.filter(col("doc_id") % 7 === 0 && col("doc_id") < 140)
-        val t = timeMin {
-          ext.SubstringIndex.probe(index, batch)
-            .write.format("noop").mode("overwrite").save()
-        }
+        val t = timeMin(ext.SubstringIndex.probe(index, batch))
         val df = ext.SubstringIndex.probe(index, batch)
         df.collect()
         (t, df.queryExecution.executedPlan.toString.contains("dynamicpruning"))
@@ -307,17 +283,11 @@ object ScaleCheck {
     // trainBatched (symbol-disjoint batches of 8) on the 1x corpus so the
     // per-merge cost and the batching win are recorded honestly.
     val bpeJson = if (!keep("bpe_rounds")) None else {
-      val merges = sys.env.getOrElse("SPARK_GRAFT_BPE_MERGES", "100").toInt
-      val k = sys.env.getOrElse("SPARK_GRAFT_BPE_BATCH_K", "8").toInt
+      val merges = 100
+      val k = 8 // trainBatched batch size
       val docs1 = Tables.documents(spark, d1)
-      val tSeq = timeMin {
-        ext.Bpe.train(docs1, merges)._1
-          .write.format("noop").mode("overwrite").save()
-      }
-      val tBat = timeMin {
-        ext.Bpe.trainBatched(docs1, merges, k)._1
-          .write.format("noop").mode("overwrite").save()
-      }
+      val tSeq = timeMin(ext.Bpe.train(docs1, merges)._1)
+      val tBat = timeMin(ext.Bpe.trainBatched(docs1, merges, k)._1)
       System.err.println(
         f"[scale] bpe_rounds merges=$merges seq=$tSeq%.1f s (${tSeq / merges}%.3f s/merge) " +
           f"batched(k=$k)=$tBat%.1f s (${tBat / merges}%.3f s/merge)")
@@ -350,15 +320,13 @@ object ScaleCheck {
       val index = ext.Similarity
         .indexRows(corpus.select("vec_id", "v"), cents, cb).cache()
       index.count() // materialize the build outside the timed region
-      // timeMin's between-rep clearCache evicts the index after rep 1, so
-      // later reps pay an in-region rebuild — the MIN statistic keeps the
-      // warm-index rep, which is the serving cost being measured
-      val t = timeMin {
-        ext.Similarity.annKnnClassify(index, corpus, probes, cents, cb,
-            nprobe = 3, shortlist = 24, k = 10)
-          .write.format("noop").mode("overwrite").save()
-      }
-      index.unpersist(blocking = true)
+      // every rep must serve from the warm index: the release sweep would
+      // evict it and the next rep would pay an in-region rebuild, so
+      // between reps only garbage is collected (the scope already
+      // released each rep's own caches)
+      val t = timeMin(ext.Similarity.annKnnClassify(index, corpus, probes, cents, cb,
+          nprobe = 3, shortlist = 24, k = 10), between = System.gc())
+      Harness.release(spark)
       t
     }
     val knnAnnJson = if (!keep("knn_ann")) None else {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -15,21 +14,13 @@ object Verify {
         sys.exit(2)
     }
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // decoupled from the thread count so the robustness replay
-    // (scripts/replay.sh) can re-verify the whole surface at an odd
+    val spark = Harness.session("graft-verify")
+    // shuffle partitions decoupled from the thread count so the robustness
+    // replay (scripts/replay.sh) can re-verify the whole surface at an odd
     // partition count — the cheap stand-in for "a real cluster
     // repartitioned the data" — without giving up local parallelism
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts INT64(NANOS)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
     new java.io.File(outDir).mkdirs()
     // Dump the oracle SQL FIRST: if the query loop below is killed partway
     // through, the driver can still score every query that did finish.
@@ -71,9 +62,6 @@ object Verify {
     // if it exceeds the budget the group is cancelled, the write throws,
     // and the timeout lands in errors.json by name like any failure.
     val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_VERIFY_TIMEOUT_SEC", "600").toLong
-    val watchdog = java.util.concurrent.Executors.newSingleThreadScheduledExecutor { r =>
-      val t = new Thread(r, "verify-watchdog"); t.setDaemon(true); t
-    }
     // progress trackers for the no-progress stall detector below: every
     // query completion (ok or failed) is "activity"
     val okNames = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
@@ -81,16 +69,6 @@ object Verify {
     val runs = selected.map { case (name, fn) =>
       scala.concurrent.Future {
         val t0 = System.nanoTime()
-        spark.sparkContext.setJobGroup(s"verify-$name", name, interruptOnCancel = true)
-        val kill = watchdog.schedule(new Runnable {
-          def run(): Unit = {
-            System.err.println(s"[verify] $name TIMED OUT after $timeoutSec s — cancelling")
-            // AndFutureJobs: a multi-job query between jobs at cancel time
-            // would otherwise just launch its next job and run to
-            // completion (observed — plain cancelJobGroup is not sticky)
-            spark.sparkContext.cancelJobGroupAndFutureJobs(s"verify-$name")
-          }
-        }, timeoutSec, java.util.concurrent.TimeUnit.SECONDS)
         // CacheTracker.scope releases EXACTLY the caches this query's
         // builder created, once its write finishes — safe under
         // concurrency, unlike a global clearCache (observed: a concurrent
@@ -98,9 +76,13 @@ object Verify {
         // of a shared InMemoryRelation mid-execution). Builders route
         // their caches through CacheTracker.cached on THIS thread, so the
         // scope sees them all; sibling queries' scopes are disjoint.
-        try CacheTracker.scope {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
+        try {
+          Harness.guarded(spark, s"verify-$name", timeoutSec) {
+            CacheTracker.scope {
+              fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+                .parquet(s"$outDir/$name")
+            }
+          }
           okNames.add(name)
           // one line per query so a partial/timed-out driver run leaves a
           // diagnosable trail instead of an empty CORRECTNESS json
@@ -126,11 +108,7 @@ object Verify {
           } catch { case e2: Throwable =>
             System.err.println(s"[verify] $name marker write failed: $e2")
           }
-        } finally {
-          kill.cancel(false)
-          spark.sparkContext.clearJobGroup()
-          lastActivity.set(System.nanoTime())
-        }
+        } finally lastActivity.set(System.nanoTime())
       }
     }
     // The per-query job-group watchdog cannot see DRIVER-side stalls
@@ -183,28 +161,13 @@ object Verify {
       outDir: String, errors: java.util.concurrent.ConcurrentHashMap[String, String]): Unit = {
     import scala.jdk.CollectionConverters._
     val json = errors.asScala.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Harness.jsonStr(k)}: ${Harness.jsonStr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/errors.json"), json)
   }
 
-  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-  // — a tab or CR in builder-authored SQL (or a multi-line exception
-  // message) would otherwise make the driver's json.load fail and silently
-  // zero the round's correctness. Shared by Bench/ScaleCheck/RecallCurve
-  // for their interpolated path fields — one escaping implementation.
-  private[graft] def jsonStr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   private def writeOracleJson(outDir: String, keep: String => Boolean): Unit = {
     val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
-      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Harness.jsonStr(k)}: ${Harness.jsonStr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
   }
 }

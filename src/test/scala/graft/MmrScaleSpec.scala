@@ -1,7 +1,6 @@
 package graft
 
 import graft.ext.Mmr
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.math.{BigDecimal, RoundingMode}
@@ -78,22 +77,8 @@ class MmrScaleSpec extends AnyFunSuite {
     assert(got.toSeq === Seq((1L, 1), (3L, 2)))
   }
 
-  private def jobsFor(k: Int): Int = {
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        counter.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      Mmr.rerank(cands, sims, k).collect()
-      // listener events post asynchronously: wait until the count settles
-      var last = -1
-      var cur = counter.get()
-      while (cur != last) { last = cur; Thread.sleep(300); cur = counter.get() }
-      cur
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  private def jobsFor(k: Int): Int =
+    JobCounter.of(spark)(Mmr.rerank(cands, sims, k).collect()).jobs.toInt
 
   test("flat-plan idiom: Spark jobs grow linearly in k (constant jobs per greedy step)") {
     val j2 = jobsFor(2); val j4 = jobsFor(4); val j6 = jobsFor(6)

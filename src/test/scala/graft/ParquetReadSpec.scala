@@ -1,13 +1,11 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import graft.config.SqliteDestination
 import graft.query.Snapshot
 import graft.sink.SqliteSnapshotCommit
 import graft.sources.SqliteSource
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -93,32 +91,10 @@ class ParquetReadSpec extends AnyFunSuite {
     }
   }
 
-  /** Spark jobs launched by `body` on this thread. Jobs carry the thread's
-    * job group, so jobs of other suites never count; listener events post
-    * asynchronously, so wait until the count settles.
+  /** Spark jobs launched by `body` on this thread (jobs of other suites
+    * carry another job group and never count).
     */
-  private def jobsIn(body: => Unit): Int = {
-    val group = s"parquet-read-spec-${System.nanoTime}"
-    val counter = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (js.properties != null &&
-            js.properties.getProperty("spark.jobGroup.id") == group)
-          counter.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(group, "ParquetReadSpec")
-    try {
-      body
-      var last = -1
-      var cur = counter.get()
-      while (cur != last) { last = cur; Thread.sleep(300); cur = counter.get() }
-      cur
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
-  }
+  private def jobsIn(body: => Unit): Int = JobCounter.of(spark)(body).jobs.toInt
 
   test("Snapshot.register mounts a 6-table snapshot with 0 Spark jobs") {
     val base = tmp("graft-pq-mount")

@@ -2,14 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared session for the whole test JVM (forked by sbt). */
+/** One shared session for the whole test JVM (forked by sbt). Pinned to 4
+  * threads and 4 shuffle partitions, so what a test observes (partition
+  * and file counts) does not follow the host's core count.
+  */
 object SparkSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts INT64(NANOS)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Harness.session("graft-test", 4)
 }
