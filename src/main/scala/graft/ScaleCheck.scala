@@ -211,6 +211,10 @@ object ScaleCheck {
     def run(name: String, dir: String): Double = timeMin(SparkEntry.queries(name)(spark, dir))
 
     val perQuery = Queries.filter(keep).map { q =>
+      // one untimed run at 1× first: the body's cold cost (JIT, codegen)
+      // would otherwise land in t1 alone and read as negative scaling
+      Harness.scopedNoop(SparkEntry.queries(q)(spark, d1))
+      Harness.release(spark)
       val t1 = run(q, d1)
       val tN = run(q, dN)
       val exp = math.log(tN / t1) / math.log(copies.toDouble)

@@ -1,7 +1,7 @@
 package graft.engine
 
 import graft.config.{Destination, GraftConfig}
-import graft.graph.{Graph, GraphNormalizer}
+import graft.graph.Graph
 import graft.sink.SnapshotSink
 import org.apache.spark.sql.SparkSession
 
@@ -117,24 +117,12 @@ object Runner {
           try {
             progress.progress(key, "collect started")
             val graph = src.collect(spark)
-            val tables = GraphNormalizer.normalize(graph)
-            // stage all tables; promotion is deferred past the barrier.
-            // Node/edge counts come from the writes' observed metrics
-            // (SnapshotSink.StagedTable) with NO second pass over the source
-            // (at 100 TB a count-after-write re-reads everything). They are
-            // the SNAPSHOT's counts — what actually landed in the
-            // destination: a node of an undeclared/non-root kind or an edge
-            // with an unresolvable endpoint is exported to no table and so
-            // counts zero, exactly like the destination's own row counts.
-            // Tables are split by the model's kind inventory, not by name —
-            // a kind literally named `link_…` still counts as nodes.
-            val staged = SnapshotSink.stage(tables, config.destination, runId)
-            val kindNames = graph.model.kinds.filter(_.aggregateRoot).map(_.fqn).toSet
-            val (kindT, linkT) = staged.partition(t => kindNames.contains(t.name))
-            val nodes = kindT.map(_.rows).sum
-            val edges = linkT.map(_.rows).sum
-            progress.progress(key, s"collect done: $nodes nodes, $edges edges")
-            (SourceReport(key, nodes, edges), staged.map(_.name))
+            // normalize and stage, promotion deferred past the barrier;
+            // the source's scoped caches are released when it returns, on
+            // this pool thread (the scope is thread-local)
+            val staged = SnapshotSink.stage(graph, config.destination, runId)
+            progress.progress(key, s"collect done: ${staged.nodes} nodes, ${staged.edges} edges")
+            (SourceReport(key, staged.nodes, staged.edges), staged.tables)
           } finally spark.sparkContext.clearJobGroup()
         }
       }.toSeq

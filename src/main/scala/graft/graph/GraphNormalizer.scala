@@ -1,7 +1,7 @@
 package graft.graph
 
 import graft.model.KindModel
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -17,8 +17,38 @@ final case class Graph(nodes: DataFrame, edges: DataFrame, model: KindModel)
   * oracle tests/collect_test.py:26-40 [T]): one table per kind named
   * `<kind>`, one link table per ordered kind pair named
   * `link_<from_kind>_<to_kind>` with columns (from_id, to_id).
+  *
+  * Staging (`SnapshotSink.stage`) reads the node set ONCE into a scoped
+  * cache ([[normalize]]); the duplicate-id check, every kind projection and
+  * the id→kind side of edge resolution read that one frame. File and SQLite
+  * destinations write every link table in ONE partitioned write
+  * ([[writeLinksPartitioned]]) whose `from_kind=/to_kind=` directories are
+  * renamed into `link_<f>_<t>` tables, so a source costs one job per kind
+  * table plus a constant, however many kind pairs it has. Only JDBC, which
+  * cannot rename directories into tables, writes per pair ([[linkTables]]).
   */
 object GraphNormalizer {
+
+  /** The graph itself cannot be staged: duplicate node ids, link-table
+    * names that collide, or a kind model that does not project. Permanently
+    * bad input — retrying cannot help — as opposed to an environmental
+    * failure of the writes (which surfaces as any other exception).
+    */
+  final class InvalidGraphException(msg: String, cause: Throwable = null)
+    extends IllegalArgumentException(msg, cause)
+
+  private def check(ok: Boolean, msg: => String): Unit =
+    if (!ok) throw new InvalidGraphException(msg)
+
+  /** One source after [[normalize]]: the graph with its node set cached in
+    * the enclosing scope, and its kind tables.
+    */
+  final case class Normalized(graph: Graph, kinds: Map[String, DataFrame]) {
+    /** Per-pair link tables ([[linkTables]]); the JDBC staging path. */
+    def links: Map[String, DataFrame] = linkTables(graph)
+    /** Kind tables plus per-pair link tables. */
+    def tables: Map[String, DataFrame] = kinds ++ links
+  }
 
   /** Kind tables: project each node's JSON document onto the kind's declared
     * schema (missing properties -> NULL) — SURVEY §2.B1. The JSON parse and
@@ -50,85 +80,109 @@ object GraphNormalizer {
     * projection; the id lookup side is broadcast when small, otherwise a
     * shuffled equi-join on id — never a driver-side collect of the edge set.
     * INNER joins by design: dangling edges are silently dropped per the
-    * producer contract (docs/GRAPH_EXPORT.md conformance checklist);
-    * [[normalize]] guards the duplicate-node-id fan-out case loudly.
+    * producer contract (docs/GRAPH_EXPORT.md conformance checklist), and so
+    * is an edge whose endpoint has no kind (NULL or empty): it belongs to
+    * no `link_<from>_<to>` table. [[normalize]] guards the
+    * duplicate-node-id fan-out case loudly.
     */
   def resolvedEdges(g: Graph): DataFrame = {
     val idKind = g.nodes.select(col("id"), col("kind"))
+      .filter(col("kind").isNotNull && col("kind") =!= "")
     g.edges
       .join(idKind.withColumnRenamed("id", "from_id").withColumnRenamed("kind", "from_kind"), "from_id")
       .join(idKind.withColumnRenamed("id", "to_id").withColumnRenamed("kind", "to_kind"), "to_id")
       .select("from_kind", "to_kind", "from_id", "to_id")
   }
 
-  /** Link tables keyed by `link_<from>_<to>`. */
+  /** The checked `link_<from>_<to>` name of every kind pair, in `pairs`
+    * order. Underscores in kind fqns make the flattened name ambiguous: two
+    * DISTINCT pairs (a_b, c) and (a, b_c) both render `link_a_b_c`, and a
+    * kind may itself be named like a link table; either way one table would
+    * silently replace the other, so both fail loudly instead.
+    */
+  def linkNames(model: KindModel, pairs: Seq[(String, String)]): Seq[String] = {
+    val names = pairs.map { case (f, t) => s"link_${f}_$t" }
+    val dup = pairs.zip(names).groupBy(_._2).filter(_._2.length > 1)
+    check(dup.isEmpty,
+      s"distinct kind pairs collide on a link-table name: " +
+        dup.map { case (n, ps) => s"$n <- ${ps.map(_._1).mkString(", ")}" }.mkString("; ") +
+        " — rename a kind or the snapshot would silently lose edges")
+    val clash = model.kinds.filter(_.aggregateRoot).map(_.fqn).toSet.intersect(names.toSet)
+    check(clash.isEmpty,
+      s"kind name(s) collide with generated link-table name(s): " +
+        s"${clash.mkString(", ")} — rename the kind or the snapshot would " +
+        "silently lose its table")
+    names
+  }
+
+  /** Link tables keyed by `link_<from>_<to>`, one filter of the resolved
+    * edge set per kind pair. The pair inventory is bounded by |kinds|^2
+    * (metadata-scale) and enumerated on the driver. Staging uses this only
+    * for JDBC; file and SQLite staging write [[writeLinksPartitioned]].
+    */
   def linkTables(g: Graph): Map[String, DataFrame] = {
     // scoped cache: the resolved plan feeds the pair enumeration AND every
     // per-pair table — uncached, the edges×nodes double join re-executes
-    // once per link table (P+1 full passes); inside a runner scope this is
-    // one pass + P filtered scans, outside a scope it degrades to the old
-    // recompute instead of leaking a pinned Dataset
+    // once per link table; outside a scope it degrades to that recompute
+    // instead of leaking a pinned Dataset
     val resolved = graft.CacheTracker.cachedInScope(resolvedEdges(g))
-    // The kind-pair inventory is bounded by |kinds|^2 (metadata-scale, not
-    // data-scale) — safe to enumerate on the driver. At 100 TB use
-    // [[writeLinksPartitioned]] instead; the per-pair DataFrames below
-    // share the same resolved plan.
     val pairs = resolved.select("from_kind", "to_kind").distinct()
-      .collect().map(r => (r.getString(0), r.getString(1)))
-    // underscores in kind fqns make the flattened name ambiguous: two
-    // DISTINCT pairs (a_b, c) and (a, b_c) both render "link_a_b_c", and
-    // toMap's last-wins merge would silently drop one pair's edge table
-    // from the snapshot — the same silent loss normalize() guards against
-    // for kind-vs-link names. Fail loudly instead.
-    val dup = pairs.groupBy { case (f, t) => s"link_${f}_$t" }
-      .filter(_._2.length > 1)
-    require(dup.isEmpty,
-      s"distinct kind pairs collide on a link-table name: " +
-        dup.map { case (n, ps) => s"$n <- ${ps.mkString(", ")}" }.mkString("; ") +
-        " — rename a kind or the snapshot would silently lose edges")
-    pairs.map { case (f, t) =>
-      s"link_${f}_$t" -> resolved
+      .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    linkNames(g.model, pairs).zip(pairs).map { case (name, (f, t)) =>
+      name -> resolved
         .filter(col("from_kind") === f && col("to_kind") === t)
         .select("from_id", "to_id")
     }.toMap
   }
 
-  /** The 100 TB link write path: ONE pass over the resolved edge set,
-    * written partitioned by (from_kind, to_kind) — no driver-side pair
-    * enumeration, no per-pair job, and readers of a single pair get
-    * partition pruning (`…/from_kind=<f>/to_kind=<t>`) for free.
+  /** Every link table in ONE write: the resolved edge set partitioned by
+    * (from_kind, to_kind) under `path`, in `format` with the destination's
+    * writer `options`. No driver-side pair enumeration and no per-pair job;
+    * a reader of one pair gets partition pruning
+    * (`…/from_kind=<f>/to_kind=<t>`), and staging renames each pair's
+    * directory into its `link_<f>_<t>` table. Returns the number of edges
+    * written, observed on the write itself.
     */
-  def writeLinksPartitioned(g: Graph, path: String): Unit =
-    resolvedEdges(g).write.mode("overwrite")
-      .partitionBy("from_kind", "to_kind").parquet(path)
+  def writeLinksPartitioned(g: Graph, path: String, format: String = "parquet",
+                            options: Map[String, String] = Map.empty): Long = {
+    val obs = Observation()
+    resolvedEdges(g).observe(obs, count(lit(1)).as("rows"))
+      .write.mode("overwrite").format(format).options(options)
+      .partitionBy("from_kind", "to_kind").save(path)
+    obs.get("rows").asInstanceOf[Long]
+  }
 
-  /** The full relational snapshot: kind tables + link tables. A kind
-    * whose fqn collides with a generated `link_<from>_<to>` name is
-    * rejected loudly — a Map merge would silently drop the kind table
-    * from the snapshot.
+  /** Cache the node set in the enclosing scope, check node ids, and build
+    * the kind tables. Link tables are built by the staging write
+    * ([[writeLinksPartitioned]] or [[Normalized.links]]); their names are
+    * checked by [[linkNames]] before anything is staged.
     */
-  def normalize(g: Graph): Map[String, DataFrame] = {
+  def normalize(g: Graph): Normalized = {
+    // one parse: the duplicate-id check, every kind projection and edge
+    // resolution all read this frame (a passthrough outside a scope)
+    val nodes = graft.CacheTracker.cachedInScope(g.nodes)
     // Duplicate node ids, checked LOUDLY at snapshot-write time: each
     // duplicate would silently MULTIPLY its incident edges into every
-    // link table (resolvedEdges joins on id) — the same silent-corruption
-    // class the name-collision requires below exist for. Dangling edges
-    // are NOT an error: docs/GRAPH_EXPORT.md pins "dangling edges are
-    // silently dropped" as the producer contract, and resolvedEdges'
-    // inner joins implement exactly that. Cost: one distinct-count over
-    // node ids, write-time only.
-    val ids = g.nodes.select("id")
-    val dupIds = ids.count() - ids.distinct().count()
-    require(dupIds == 0,
+    // link table (resolvedEdges joins on id). Dangling edges are NOT an
+    // error: docs/GRAPH_EXPORT.md pins "dangling edges are silently
+    // dropped" as the producer contract. ONE job: a map-side-combined
+    // count per id, summed, with the node cache filled by the same pass —
+    // as a DataFrame aggregate, adaptive execution would run the cache
+    // fill, the shuffle and the result as three jobs. NULL ids group
+    // together, so two NULL ids are one duplicate.
+    val dupIds = nodes.select("id").rdd.map(r => (r.get(0), 1L)).reduceByKey(_ + _)
+      .map { case (_, n) => n - 1 }.fold(0L)(_ + _)
+    check(dupIds == 0,
       s"$dupIds duplicate node id(s) — each would multiply its incident " +
         "edges into every link table; deduplicate the node set first")
-    val kt = kindTables(g)
-    val lt = linkTables(g)
-    val clash = kt.keySet.intersect(lt.keySet)
-    require(clash.isEmpty,
-      s"kind name(s) collide with generated link-table name(s): " +
-        s"${clash.mkString(", ")} — rename the kind or the snapshot would " +
-        "silently lose its table")
-    kt ++ lt
+    val cg = g.copy(nodes = nodes)
+    val kinds =
+      try kindTables(cg)
+      catch {
+        case scala.util.control.NonFatal(e) => throw new InvalidGraphException(
+          s"the kind model does not project to tables: ${e.getMessage}", e)
+      }
+    Normalized(cg, kinds)
   }
 
   /** JSON-lines export record shape (nodes, edges, and kind records). */

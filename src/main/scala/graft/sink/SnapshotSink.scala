@@ -1,8 +1,10 @@
 package graft.sink
 
 import graft.config.{ArrowDest, DbDest, Destination, FileDestination, JdbcDestination, SqliteDest}
+import graft.graph.{Graph, GraphNormalizer}
 import org.apache.hadoop.fs.{FileUtil, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
 
@@ -16,9 +18,16 @@ import java.sql.DriverManager
   *  - File targets: write `<base>/_staging/<runId>/<table>` then swap the
   *    `<base>/current` directory by rename (atomic on HDFS-like FS; on
   *    object stores use a pointer-file commit — same protocol).
+  *  - SQLite: stage parquet under `<database>.staging/<runId>/<table>`;
+  *    the commit builds one database file and renames it into place.
   *  - JDBC targets: write `<table>__tmp` then one transaction of
   *    RENAME DDL per table (dialect-specific), mirroring [D]
   *    `SqlUpdater.swap_temp_tables`.
+  *
+  * [[stage]] writes one source: one write per kind table, and for file and
+  * SQLite targets ONE partitioned write of all link tables into a directory
+  * private to the source, whose pair directories are renamed into
+  * `<runId>/link_<f>_<t>`.
   */
 object SnapshotSink {
 
@@ -41,68 +50,122 @@ object SnapshotSink {
     df.select(cols.toSeq: _*)
   }
 
-  /** A staged table plus the row count its write produced — observed as a
-    * write-side metric (`Dataset.observe`), NOT by re-executing the table's
-    * plan: at 100 TB a count-after-write is a second full pass per source.
+  /** What one source staged: its table names, and its node and edge counts
+    * — the SNAPSHOT's counts, observed on the writes (`Dataset.observe`),
+    * never by re-executing a table's plan: at 100 TB a count-after-write
+    * is a second full pass per source. A node of an undeclared or non-root
+    * kind, or an edge with an unresolvable endpoint, lands in no table and
+    * counts zero, exactly like the destination's own row counts.
     */
-  final case class StagedTable(name: String, rows: Long)
+  final case class Staged(tables: Seq[String], nodes: Long, edges: Long)
 
-  /** Stage all tables of one source under the shared runId; several sources
-    * stage concurrently into the same snapshot. Returns the staged names
-    * with their observed row counts.
+  /** Where and how a directory-staged destination (file or SQLite) stages:
+    * each run's tables under `<root>/<runId>`, written as `format` with
+    * the destination's writer `options`.
     */
-  def stage(tables: Map[String, DataFrame], dest: Destination, runId: String): Seq[StagedTable] = {
-    // one Observation per table write: the count rides the write job's
-    // accumulators (exactly one action per staged table, the contract
-    // Observation requires) and is available the moment the write returns
-    def observed(df: DataFrame): (DataFrame, org.apache.spark.sql.Observation) = {
-      val obs = org.apache.spark.sql.Observation()
-      (df.observe(obs, count(lit(1)).as("rows")), obs)
+  private final case class FileStaging(root: String, format: String, options: Map[String, String])
+
+  private def fileStaging(dest: Destination): FileStaging = dest match {
+    case ArrowDest(cfg) =>
+      val opts = Map("maxRecordsPerFile" -> cfg.batchSize.toString)
+      // reference CSV carries a header [T :52]
+      if (cfg.format == "csv") FileStaging(s"${cfg.path}/_staging", "csv", opts + ("header" -> "true"))
+      else FileStaging(s"${cfg.path}/_staging", "parquet", opts)
+    // parquet with the SQL-flattened schema: staging keeps full write
+    // parallelism; the single-file build happens once at commit
+    // (SqliteSnapshotCommit), after the global barrier
+    case SqliteDest(cfg) => FileStaging(s"${cfg.database}.staging", "parquet", Map.empty)
+    case other => throw new IllegalArgumentException(s"$other stages no files")
+  }
+
+  /** Stage one source's graph under `runId` — the one staging entry point
+    * of the batch runner and the streaming ingest. Several sources stage
+    * concurrently into the same run; promotion is the committer's, after
+    * the global barrier. The source's caches live in a
+    * [[graft.CacheTracker.scope]] that closes when its staging returns.
+    * A graph that cannot be staged at all (duplicate node ids, colliding
+    * table names, a model that does not project) fails with
+    * [[GraphNormalizer.InvalidGraphException]] before anything lands in
+    * `<runId>`.
+    */
+  def stage(g: Graph, dest: Destination, runId: String): Staged = graft.CacheTracker.scope {
+    val n = GraphNormalizer.normalize(g)
+    val (links, edges) = dest match {
+      case DbDest(_) =>
+        // JDBC cannot rename directories into tables: per-pair writes off
+        // the scoped resolved edge set, names checked before any write
+        val staged = n.links.map { case (name, df) => name -> writeTable(name, df, dest, runId) }
+        (staged.keys.toSeq, staged.values.sum)
+      case _ => stageLinks(n, fileStaging(dest), runId)
     }
-    tables.map { case (name, df) =>
-      val obs = dest match {
-        case ArrowDest(cfg) =>
-          val staging = s"${cfg.path}/_staging/$runId"
-          cfg.format match {
-            case "csv" =>
-              val (o, obs) = observed(flattenForSql(df))
-              o.write.mode("overwrite")
-                .option("maxRecordsPerFile", cfg.batchSize)
-                .option("header", "true") // reference CSV carries a header [T :52]
-                .csv(s"$staging/$name")
-              obs
-            case _ =>
-              val (o, obs) = observed(df)
-              o.write.mode("overwrite")
-                .option("maxRecordsPerFile", cfg.batchSize)
-                .parquet(s"$staging/$name")
-              obs
-          }
-        case SqliteDest(cfg) =>
-          // stage as parquet with the SQL-flattened schema: staging keeps
-          // full write parallelism; the single-file build happens once at
-          // commit (SqliteSnapshotCommit), after the global barrier
-          val (o, obs) = observed(flattenForSql(df))
-          o.write.mode("overwrite")
-            .parquet(s"${cfg.database}.staging/$runId/$name")
-          obs
-        case DbDest(cfg) =>
-          val (o, obs) = observed(flattenForSql(df))
-          val w = o.write.mode("overwrite")
-            .format("jdbc")
-            .option("url", cfg.url)
-            .option("dbtable", s"${name}__tmp")
-            .option("batchsize", cfg.batchSize)
-          cfg.user.foreach(w.option("user", _))
-          cfg.password.foreach(w.option("password", _))
-          // connection args (ssl etc.) apply whether the url was explicit
-          // or assembled — Spark forwards unknown options as JDBC properties
-          cfg.args.foreach { case (k, v) => w.option(k, v) }
-          w.save()
-          obs
+    val kinds = n.kinds.map { case (name, df) => name -> writeTable(name, df, dest, runId) }
+    Staged(kinds.keys.toSeq ++ links, kinds.values.sum, edges)
+  }
+
+  /** One partitioned write of every link table into a directory private to
+    * this source (a sibling of the run directory, so it is never promoted
+    * and can never collide with a table name); the listing of its pair
+    * directories is checked ([[GraphNormalizer.linkNames]]) before each is
+    * renamed to `<runId>/link_<f>_<t>`. The private directory is removed
+    * either way. Returns the link table names and the observed edge count.
+    */
+  private def stageLinks(n: GraphNormalizer.Normalized, to: FileStaging,
+                         runId: String): (Seq[String], Long) = {
+    val runDir = s"${to.root}/$runId"
+    val links = new Path(s"$runDir.links-${java.util.UUID.randomUUID().toString.take(8)}")
+    val fs = links.getFileSystem(n.graph.nodes.sparkSession.sparkContext.hadoopConfiguration)
+    try {
+      val edges = GraphNormalizer.writeLinksPartitioned(n.graph, links.toString, to.format, to.options)
+      def values(dir: Path, column: String) =
+        fs.listStatus(dir).toSeq.map(_.getPath).filter(_.getName.startsWith(s"$column="))
+          .map(p => ExternalCatalogUtils.unescapePathName(p.getName.stripPrefix(s"$column=")) -> p)
+      val pairs = for {
+        (f, fDir) <- values(links, "from_kind")
+        (t, tDir) <- values(fDir, "to_kind")
+      } yield ((f, t), tDir)
+      val names = GraphNormalizer.linkNames(n.graph.model, pairs.map(_._1))
+      names.zip(pairs).foreach { case (name, (_, dir)) =>
+        // the same path string a per-table write would use; replaces a
+        // table of that name a replayed run staged before
+        val table = new Path(s"$runDir/$name")
+        if (fs.exists(table)) fs.delete(table, true)
+        fs.mkdirs(table.getParent)
+        require(fs.rename(dir, table), s"could not move $dir to $table")
+        // the completion marker a per-table write leaves in its directory
+        fs.create(new Path(table, "_SUCCESS")).close()
       }
-      StagedTable(name, obs.get("rows").asInstanceOf[Long])
-    }.toSeq
+      (names, edges)
+    } finally fs.delete(links, true)
+  }
+
+  /** Write one table into the run's staging; returns its observed rows.
+    * One Observation per write: the count rides the write job's
+    * accumulators and is available the moment the write returns.
+    */
+  private def writeTable(name: String, df: DataFrame, dest: Destination, runId: String): Long = {
+    val obs = Observation()
+    // only parquet files keep nested columns; csv and SQL get JSON text
+    val nested = dest match { case ArrowDest(cfg) => cfg.format != "csv"; case _ => false }
+    val out = (if (nested) df else flattenForSql(df)).observe(obs, count(lit(1)).as("rows"))
+    dest match {
+      case DbDest(cfg) =>
+        val w = out.write.mode("overwrite")
+          .format("jdbc")
+          .option("url", cfg.url)
+          .option("dbtable", s"${name}__tmp")
+          .option("batchsize", cfg.batchSize)
+        cfg.user.foreach(w.option("user", _))
+        cfg.password.foreach(w.option("password", _))
+        // connection args (ssl etc.) apply whether the url was explicit
+        // or assembled — Spark forwards unknown options as JDBC properties
+        cfg.args.foreach { case (k, v) => w.option(k, v) }
+        w.save()
+      case _ =>
+        val to = fileStaging(dest)
+        out.write.mode("overwrite").format(to.format).options(to.options)
+          .save(s"${to.root}/$runId/$name")
+    }
+    obs.get("rows").asInstanceOf[Long]
   }
 
   /** One commit per run — called exactly once, after the global barrier.

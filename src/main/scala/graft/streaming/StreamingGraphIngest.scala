@@ -28,7 +28,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Poison-file isolation: a malformed export fails ITS batch only — the
   * error is reported through `progress` and ingestion continues with the
   * next file (set `failOnError=true` to fail the whole query instead).
-  * The skip is scoped to the PARSE window: stage/commit failures are
+  * The skip is scoped to the PARSE window plus a graph that cannot be
+  * staged at all (`GraphNormalizer.InvalidGraphException`: duplicate node
+  * ids, colliding table names); other stage/commit failures are
   * environmental and always fail the batch before its checkpoint
   * commits, so a well-formed snapshot is retried, never silently lost.
   */
@@ -77,12 +79,12 @@ object StreamingGraphIngest {
     writer
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         // one JSON parse per snapshot: the batch plan is otherwise
-        // re-executed by every kind-table write + the pair enumeration
+        // re-executed by the kind-record collect and every staging write
         batch.persist()
         try {
           // FULL materialization BEFORE the poison-file window below:
           // isEmpty touches only the first partition, so the source file
-          // would otherwise still be read inside the normalize try — and a
+          // would otherwise still be read inside the skip window — and a
           // transient read error (S3 503, timeout) there would be
           // classified as a permanently-bad export and the well-formed
           // snapshot silently skipped. count() pulls every partition into
@@ -104,34 +106,36 @@ object StreamingGraphIngest {
                 -1L
             }
           if (nRows > 0) {
-            // strict: THIS path promises "a malformed export fails ITS
-            // batch" (scaladoc above) — a truncated file must not commit
-            // a partial snapshot over the previous good one
-            // skip-on-error covers ONLY the poison-file window (parse +
-            // normalize): a malformed export is permanently bad and
-            // retrying it forever would wedge the stream. Stage/commit
-            // failures are environmental (S3 timeout, disk-full, JDBC
-            // blip) — rethrowing them fails the batch BEFORE the
-            // checkpoint commits, so the well-formed snapshot is retried
-            // instead of silently lost.
-            val tables = try {
-              val g = GraphNormalizer.fromExportRecords(batch, fallback,
-                strict = true)
-              GraphNormalizer.normalize(g)
-            } catch {
-              // NonFatal only: an OOM/StackOverflow/interrupt must fail
-              // the query, not be reported as a skipped batch over a
-              // possibly corrupted JVM
-              case scala.util.control.NonFatal(e) if !failOnError =>
-                progress.progress("graph_export",
-                  s"batch $batchId FAILED (skipped, previous snapshot intact): ${e.getMessage}")
-                null
+            // skip-on-error covers ONLY the poison-file window: parsing
+            // (strict: THIS path promises "a malformed export fails ITS
+            // batch" — a truncated file must not commit a partial snapshot
+            // over the previous good one) and a graph that cannot be
+            // staged at all (duplicate ids, colliding names — both checked
+            // before anything lands in the run's staging). A malformed
+            // export is permanently bad and retrying it forever would
+            // wedge the stream. Stage/commit failures are environmental
+            // (S3 timeout, disk-full, JDBC blip) — rethrowing them fails
+            // the batch BEFORE the checkpoint commits, so the well-formed
+            // snapshot is retried instead of silently lost.
+            // NonFatal only: an OOM/StackOverflow/interrupt must fail the
+            // query, not be reported as a skipped batch over a possibly
+            // corrupted JVM
+            def skipped(e: Throwable): Null = {
+              progress.progress("graph_export",
+                s"batch $batchId FAILED (skipped, previous snapshot intact): ${e.getMessage}")
+              null
             }
-            if (tables != null) {
-              val runId = s"s$batchId"
-              val staged = SnapshotSink.stage(tables, dest, runId)
-              SnapshotSink.committer(dest, runId, staged.map(_.name)).commit(batch.sparkSession)
-              progress.progress("graph_export", s"snapshot $runId committed: ${staged.size} tables")
+            val runId = s"s$batchId"
+            val g =
+              try GraphNormalizer.fromExportRecords(batch, fallback, strict = true)
+              catch { case scala.util.control.NonFatal(e) if !failOnError => skipped(e) }
+            val staged =
+              if (g == null) null
+              else try SnapshotSink.stage(g, dest, runId)
+              catch { case e: GraphNormalizer.InvalidGraphException if !failOnError => skipped(e) }
+            if (staged != null) {
+              SnapshotSink.committer(dest, runId, staged.tables).commit(batch.sparkSession)
+              progress.progress("graph_export", s"snapshot $runId committed: ${staged.tables.size} tables")
             }
           }
         } finally batch.unpersist()

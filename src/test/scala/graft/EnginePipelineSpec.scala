@@ -354,8 +354,7 @@ class EnginePipelineSpec extends AnyFunSuite {
     // baseline: normalize + stage only (the unavoidable write passes)
     val b1 = Files.createTempDirectory("graft-passes-a").toString
     val before = scans.value
-    sink.SnapshotSink.stage(graft.graph.GraphNormalizer.normalize(mkGraph()),
-      ArrowDest(FileDestination("parquet", b1)), "rid")
+    sink.SnapshotSink.stage(mkGraph(), ArrowDest(FileDestination("parquet", b1)), "rid")
     val stagePasses = scans.value - before
 
     val b2 = Files.createTempDirectory("graft-passes-b").toString
@@ -367,6 +366,83 @@ class EnginePipelineSpec extends AnyFunSuite {
     assert(runPasses == stagePasses,
       s"Runner.run scanned the source ${runPasses / nRows.toDouble} times vs " +
       s"${stagePasses / nRows.toDouble} for staging alone")
+  }
+
+  /** A graph over kinds `a` and `b` (4 nodes each) whose node rows count
+    * every scan in `scans`, with one edge per kind pair in `pairs`.
+    */
+  private def pairGraph(pairs: Seq[(String, String)],
+                        scans: org.apache.spark.util.LongAccumulator): Graph = {
+    import org.apache.spark.sql.{Row, types => T}
+    import graft.model.{Kind, KindModel}
+    import spark.implicits._
+    val model = KindModel(Seq(Kind("a", KindModel.baseProperties), Kind("b", KindModel.baseProperties)))
+    val rows = for (k <- Seq("a", "b"); i <- 1 to 4)
+      yield Row(s"$k$i", k, s"""{"id":"$k$i","name":"$k $i","kind":"$k"}""")
+    val schema = T.StructType(Seq(
+      T.StructField("id", T.StringType), T.StructField("kind", T.StringType),
+      T.StructField("reported", T.StringType)))
+    val nodes = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 2).map { r => scans.add(1); r }, schema)
+    val edges = pairs.zipWithIndex.map { case ((f, t), i) => (s"$f${i + 1}", s"$t${4 - i}") }
+      .toDF("from_id", "to_id")
+    Graph(nodes, edges, model)
+  }
+
+  private def pairRegistry(g: => Graph): Map[String, Source] =
+    Map("p" -> new Source { val name = "p"; def collect(s: SparkSession): Graph = g })
+
+  private val allPairs = Seq("a" -> "a", "a" -> "b", "b" -> "a", "b" -> "b")
+
+  test("one Runner.run scans the node source's rows exactly once") {
+    // the duplicate-id check, every kind projection and edge resolution
+    // read ONE scoped cache of the node set, however many kinds and pairs
+    val scans = spark.sparkContext.longAccumulator("node-scans-once")
+    val base = Files.createTempDirectory("graft-one-scan").toString
+    val report = Runner.run(spark, GraftConfig(Map("p" -> Map.empty),
+      ArrowDest(FileDestination("parquet", base))), pairRegistry(pairGraph(allPairs, scans)))
+    assert(report.sources == Seq(engine.SourceReport("p", 8, 4)))
+    assert(scans.value == 8, s"the 8 node rows were scanned ${scans.value / 8.0} times")
+    assert(new java.io.File(s"$base/current").list().toSet ==
+      Set("a", "b") ++ allPairs.map { case (f, t) => s"link_${f}_$t" })
+  }
+
+  test("a source's Spark jobs do not grow with its number of link pairs") {
+    // one partitioned link write per source: 1 kind pair and 4 kind pairs
+    // over the same kinds launch the same jobs in the run's groups
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    val events = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val group = Option(e.properties).map(_.getProperty("spark.jobGroup.id", "")).getOrElse("")
+        if (group.startsWith("graft-run-")) jobs.incrementAndGet()
+        events.incrementAndGet()
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = events.incrementAndGet()
+    }
+    def settled(): Long = {
+      // listener events post asynchronously: wait until none arrives for 500 ms
+      var seen = -1L
+      while (seen != events.get) { seen = events.get; Thread.sleep(500) }
+      jobs.get
+    }
+    def jobsFor(pairs: Seq[(String, String)]): Long = {
+      val scans = spark.sparkContext.longAccumulator("node-scans-jobs")
+      val base = Files.createTempDirectory("graft-pair-jobs").toString
+      val before = settled()
+      val report = Runner.run(spark, GraftConfig(Map("p" -> Map.empty),
+        ArrowDest(FileDestination("parquet", base))), pairRegistry(pairGraph(pairs, scans)))
+      assert(report.totalEdges == pairs.size)
+      settled() - before
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      jobsFor(allPairs) // warm: the first run may plan differently
+      val one = jobsFor(Seq("a" -> "b"))
+      val four = jobsFor(allPairs)
+      assert(one > 0 && one == four, s"1 link pair: $one jobs, 4 link pairs: $four jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("nested tags survive as MapType in parquet, degrade to JSON in csv") {

@@ -43,7 +43,7 @@ class GraphExportSpec extends AnyFunSuite {
     val g = GraphNormalizer.fromJsonExport(spark, dir.toString)
     assert(g.model.kinds.map(_.fqn).toSet == ExampleSource.model.kinds.map(_.fqn).toSet)
 
-    val tables = GraphNormalizer.normalize(g)
+    val tables = GraphNormalizer.normalize(g).tables
     assert(tables.keySet == ExampleSource.expectedCounts.keySet)
     ExampleSource.expectedCounts.foreach { case (t, n) =>
       assert(tables(t).count() == n, s"table $t")
@@ -151,6 +151,70 @@ class GraphExportSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("streaming ingest skips an export that cannot be staged and keeps going") {
+    val watch = Files.createTempDirectory("graft-ingest-invalid")
+    val base = Files.createTempDirectory("graft-ingest-invalid-dest").toString
+    val dest = graft.config.ArrowDest(graft.config.FileDestination("parquet", base))
+    val skipped = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val progress = new graft.engine.ProgressListener {
+      def progress(source: String, message: String): Unit =
+        if (message.contains("skipped")) skipped.add(message)
+    }
+    val q = graft.streaming.StreamingGraphIngest.run(spark, watch.toString, dest,
+      progress = progress)
+    def regions() = spark.read.parquet(s"$base/current/example_region").count()
+    try {
+      Files.write(watch.resolve("export1.jsonl"), exportLines.asJava)
+      q.processAllAvailable()
+      assert(regions() == 2)
+
+      // a duplicate node id (a third region reusing reg1's id)
+      val dupId = """{"type":"node","id":"reg1","kind":"example_region","reported":{"id":"reg1","name":"again"}}"""
+      Files.write(watch.resolve("export2.jsonl"), (exportLines :+ dupId).asJava)
+      q.processAllAvailable()
+      assert(skipped.size == 1 && skipped.iterator.next().contains("duplicate node id"), skipped)
+      assert(regions() == 2, "previous snapshot must survive a duplicate-id export")
+
+      // a kind named like a generated link table: caught from the partition
+      // listing, after the link write, still inside the skip window
+      val clash = Seq(
+        """{"type":"kind","fqn":"link_example_account_example_region","properties":[{"name":"id","kind":"string"}]}""",
+        """{"type":"node","id":"clash1","kind":"link_example_account_example_region","reported":{"id":"clash1"}}""")
+      Files.write(watch.resolve("export3.jsonl"), (exportLines ++ clash).asJava)
+      q.processAllAvailable()
+      assert(skipped.size == 2, skipped)
+      assert(regions() == 2, "previous snapshot must survive a name-clash export")
+      assert(spark.read.parquet(s"$base/current/link_example_account_example_region")
+        .columns.toSeq == Seq("from_id", "to_id"), "the clashing kind replaced a link table")
+
+      // and the next well-formed export still commits over it
+      val without = exportLines.filterNot(l => l.contains("\"c1\"") || l.contains(":\"c1\""))
+      Files.write(watch.resolve("export4.jsonl"), without.asJava)
+      q.processAllAvailable()
+      assert(!new java.io.File(s"$base/current/link_example_region_example_custom_resource").exists(),
+        "ingestion must continue with the export AFTER the skipped ones")
+      assert(regions() == 2 && skipped.size == 2)
+      assert(!new java.io.File(s"$base/_staging").list().exists(_.contains(".links-")),
+        "a skipped export left its private link directory behind")
+    } finally q.stop()
+  }
+
+  test("streaming ingest with failOnError fails the query on a duplicate-id export") {
+    val watch = Files.createTempDirectory("graft-ingest-failfast")
+    val base = Files.createTempDirectory("graft-ingest-failfast-dest").toString
+    val dest = graft.config.ArrowDest(graft.config.FileDestination("parquet", base))
+    val q = graft.streaming.StreamingGraphIngest.run(spark, watch.toString, dest,
+      failOnError = true)
+    try {
+      val dupId = """{"type":"node","id":"reg1","kind":"example_region","reported":{"id":"reg1"}}"""
+      Files.write(watch.resolve("export1.jsonl"), (exportLines :+ dupId).asJava)
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.processAllAvailable())
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(_.isInstanceOf[GraphNormalizer.InvalidGraphException]), e.getMessage)
+      assert(!new java.io.File(s"$base/current").exists())
+    } finally q.stop()
+  }
+
   test("normalizes a 100k-node synthetic graph (data-scale smoke)") {
     import org.apache.spark.sql.functions._
     import graft.model.{Kind, KindModel, KindProperty}
@@ -180,7 +244,7 @@ class GraphExportSpec extends AnyFunSuite {
       Kind("user_record", KindModel.baseProperties)))
     val g = graft.graph.Graph(eventNodes.unionByName(userNodes), edges, model)
 
-    val tables = GraphNormalizer.normalize(g)
+    val tables = GraphNormalizer.normalize(g).tables
     val nEvents = ev.count()
     val nUsers = ev.select("user_id").distinct().count()
     assert(tables("event_record").count() == nEvents)
@@ -204,8 +268,8 @@ class GraphExportSpec extends AnyFunSuite {
     // model travels with the export
     assert(back.model.kinds.map(_.fqn).toSet == g.model.kinds.map(_.fqn).toSet)
     // normalized output identical table-for-table
-    val t1 = GraphNormalizer.normalize(g)
-    val t2 = GraphNormalizer.normalize(back)
+    val t1 = GraphNormalizer.normalize(g).tables
+    val t2 = GraphNormalizer.normalize(back).tables
     assert(t1.keySet == t2.keySet)
     t1.keySet.foreach { t =>
       // set ops reject MapType (tags) — compare through the same canonical
@@ -237,7 +301,7 @@ class GraphExportSpec extends AnyFunSuite {
     assert(child.bases == Seq("resource_base"))
     assert(!back.model("resource_base").aggregateRoot)
     // inherited columns survive: the projected table has base + own props
-    val t = GraphNormalizer.normalize(back)
+    val t = GraphNormalizer.normalize(back).tables
     assert(t.keySet == Set("child_thing"), s"unexpected tables: ${t.keySet}")
     val cols = t("child_thing").columns.toSet
     assert(Set("id", "name", "kind", "extra").subsetOf(cols), s"cols: $cols")
@@ -276,7 +340,7 @@ class GraphExportSpec extends AnyFunSuite {
     assert(bare.bases.isEmpty && bare.aggregateRoot && bare.properties.isEmpty)
     assert(!g.model("late_kind").aggregateRoot)
 
-    val tables = GraphNormalizer.normalize(g)
+    val tables = GraphNormalizer.normalize(g).tables
     // non-root late_kind gets no table; property-less bare_kind projects an
     // empty schema and is counted by its rows
     assert(tables.keySet == Set("bare_kind", "thing", "link_thing_thing"),
@@ -328,11 +392,9 @@ class GraphExportSpec extends AnyFunSuite {
     // both databases go through the NATIVE sqlite sink: one from the
     // directly-collected graph, one from the cold-ingested export
     def writeDb(gr: graft.graph.Graph, db: String): Unit = {
-      val tables = GraphNormalizer.normalize(gr)
-      val staged = SnapshotSink.stage(tables,
-        SqliteDest(SqliteDestination(db)), "parity")
+      val staged = SnapshotSink.stage(gr, SqliteDest(SqliteDestination(db)), "parity")
       SnapshotSink.committer(SqliteDest(SqliteDestination(db)), "parity",
-        staged.map(_.name).toSeq).commit(spark)
+        staged.tables).commit(spark)
     }
     val base = Files.createTempDirectory("graft-parity-db").toString
     val (dbDirect, dbIngest) = (s"$base/direct.db", s"$base/ingest.db")
@@ -382,7 +444,7 @@ class GraphExportSpec extends AnyFunSuite {
     Files.write(dir.resolve("graph.jsonl"), (exportLines :+ truncated).asJava)
     // default: the contract's drop — tables come out complete
     val g = GraphNormalizer.fromJsonExport(spark, dir.toString)
-    assert(GraphNormalizer.normalize(g)("example_region").count() == 2)
+    assert(GraphNormalizer.normalize(g).tables("example_region").count() == 2)
     // strict: the first corrupt line aborts the ingest with the line text
     val e = intercept[IllegalArgumentException](
       GraphNormalizer.fromJsonExport(spark, dir.toString, strict = true))
@@ -410,6 +472,6 @@ class GraphExportSpec extends AnyFunSuite {
     assert(e.getMessage.contains("no kind records"))
     // explicit fallback model still works (library entry point)
     val g = GraphNormalizer.fromJsonExport(spark, dir.toString, Some(ExampleSource.model))
-    assert(GraphNormalizer.normalize(g)("example_region").count() == 2)
+    assert(GraphNormalizer.normalize(g).tables("example_region").count() == 2)
   }
 }

@@ -10,10 +10,14 @@ object BigSqliteCheck {
     val cfg = graft.config.SqliteDestination("/tmp/big.db")
     val li = graft.Tables.lineitem(spark, "/root/testdata/sf0.01")
     val ev = graft.Tables.events(spark, "/root/testdata/sf0.01")
-    val staged = SnapshotSink.stage(Map("lineitem" -> li, "events" -> ev),
-      graft.config.SqliteDest(cfg), "bigrun")
-    println("staged: " + staged)
-    SqliteSnapshotCommit(cfg, "bigrun", staged.map(_.name)).commit(spark)
+    // the SQLite staging layout: SQL-flattened parquet under <db>.staging/<runId>
+    val tables = Map("lineitem" -> li, "events" -> ev)
+    tables.foreach { case (name, df) =>
+      SnapshotSink.flattenForSql(df).write.mode("overwrite")
+        .parquet(s"${cfg.database}.staging/bigrun/$name")
+    }
+    println("staged: " + tables.keys.mkString(", "))
+    SqliteSnapshotCommit(cfg, "bigrun", tables.keys.toSeq).commit(spark)
     println("committed " + new java.io.File("/tmp/big.db").length() + " bytes")
     spark.stop()
   }
