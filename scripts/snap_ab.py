@@ -3,16 +3,16 @@
 
 Usage, from the repo root:
   python3 scripts/snap_ab.py --parent <git rev> --workload wide_parquet --seeds 701-710
-  python3 scripts/snap_ab.py --parent-tree <dir> --workload deep_sqlite --seeds 701-706
 
-Checks the parent out as a detached `git worktree` in a temporary
-directory (removed at the end), or uses an existing checkout given with
---parent-tree. For each seed it runs `snapbench/run.py` once in each tree,
-alternating which side runs first, so drift of the host over the session
-falls on both sides alike. Then it prints, for every end-to-end metric
-declared in BENCHMARK.json: each side's median [Q1, Q3], the change of the
-median, the pairs the change won, and whether the gap of the medians is
-larger than the parent's interquartile range, in the better direction.
+Extracts the committed files of the parent revision (`git archive`) into
+a temporary directory, removed at the end; unlike a `git worktree`, this
+leaves nothing registered in the repository if the script is killed. For
+each seed it runs `snapbench/run.py` once in each tree for BENCHMARK.json's
+`run_seconds`, alternating which side runs first, so drift of the host over
+the session falls on both sides alike. Then it prints, for every end-to-end
+metric declared in BENCHMARK.json: each side's median [Q1, Q3], the change
+of the median, the pairs the change won, and whether the gap of the medians
+is larger than the parent's interquartile range, in the better direction.
 A run that fails or reports `correct: false` is named and left out.
 """
 import argparse
@@ -34,9 +34,9 @@ def seeds(spec):
     return [int(s) for s in spec.split(",")]
 
 
-def run(tree, workload, seed, seconds, trace):
+def run(tree, workload, seed, seconds):
     cmd = [sys.executable, "snapbench/run.py", "--workload", workload, "--seed", str(seed),
-           "--seconds", str(seconds), "--trace", str(trace)]
+           "--seconds", str(seconds)]
     p = subprocess.run(cmd, cwd=tree, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
     lines = p.stdout.strip().splitlines()
     try:
@@ -57,52 +57,41 @@ def quartiles(xs):
 
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    side = ap.add_mutually_exclusive_group(required=True)
-    side.add_argument("--parent", help="git revision to compare against")
-    side.add_argument("--parent-tree", help="an existing checkout of the parent")
+    ap.add_argument("--parent", required=True, help="git revision to compare against")
     ap.add_argument("--workload", required=True, choices=["wide_parquet", "deep_sqlite"])
     ap.add_argument("--seeds", required=True, help="A-B or a comma list")
-    ap.add_argument("--seconds", type=float, help="per run (default: BENCHMARK.json run_seconds)")
-    ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
-    ap.add_argument("--out", help="write every run's metrics here as JSON")
     args = ap.parse_args()
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
-    seconds = args.seconds or bench.get("run_seconds", 20)
+    seconds = bench["run_seconds"]
     metrics = bench["end_to_end"]
 
-    tmp = None
-    parent = args.parent_tree
-    if args.parent:
-        tmp = tempfile.mkdtemp(prefix="snap_ab-")
-        parent = os.path.join(tmp, "parent")
-        subprocess.run(["git", "worktree", "add", "--detach", parent, args.parent],
-                       cwd=ROOT, check=True, stdout=subprocess.DEVNULL)
+    tmp = tempfile.mkdtemp(prefix="snap_ab-")
+    parent = os.path.join(tmp, "parent")
     runs = {"parent": [], "change": []}
     try:
+        os.mkdir(parent)
+        archive = subprocess.Popen(["git", "archive", args.parent], cwd=ROOT,
+                                   stdout=subprocess.PIPE)
+        subprocess.run(["tar", "-x", "-C", parent], stdin=archive.stdout, check=True)
+        archive.stdout.close()
+        if archive.wait():
+            sys.exit(f"git archive {args.parent} failed")
         for i, seed in enumerate(seeds(args.seeds)):
             order = [("parent", parent), ("change", ROOT)]
             if i % 2:
                 order.reverse()
             pair = {}
             for name, tree in order:
-                m, err = run(tree, args.workload, seed, seconds, args.trace)
+                m, err = run(tree, args.workload, seed, seconds)
                 print(f"[snap_ab] seed {seed} {name}: " +
                       (err or f"snapshot_s {m.get('snapshot_s', float('nan')):.3f}"), file=sys.stderr)
                 pair[name] = m
             for name in runs:
                 runs[name].append((seed, pair[name]))
     finally:
-        if tmp:
-            subprocess.run(["git", "worktree", "remove", "--force", parent], cwd=ROOT,
-                           stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
-            shutil.rmtree(tmp, ignore_errors=True)
-            subprocess.run(["git", "worktree", "prune"], cwd=ROOT)
-
-    if args.out:
-        with open(args.out, "w") as f:
-            json.dump({"workload": args.workload, "seconds": seconds, "runs": runs}, f, indent=1)
+        shutil.rmtree(tmp, ignore_errors=True)
 
     both = [(p, c) for (_, p), (_, c) in zip(runs["parent"], runs["change"]) if p and c]
     print(f"{args.workload}: {len(both)} complete pairs of {len(runs['parent'])}")

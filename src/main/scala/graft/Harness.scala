@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.util.concurrent.{ConcurrentHashMap, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
+import scala.jdk.CollectionConverters._
 
 /** The measurement harness the mains share (Bench, Verify, ScaleCheck,
   * ChurnCheck, RecallCurve) and the test session: one session recipe, one
@@ -176,10 +177,20 @@ final class JobCounter(spark: SparkSession) extends SparkListener with AutoClose
     * asynchronously, so wait until no new event arrived for 300 ms. A
     * lookup with no event since the last settle returns at once.
     */
-  def apply(group: String): Counts = synchronized {
+  def apply(group: String): Counts = { settle(); counts.getOrDefault(group, Counts()) }
+
+  /** The settled counts summed over every group whose name starts with
+    * `prefix` (a run whose job groups carry per-run suffixes).
+    */
+  def withPrefix(prefix: String): Counts = {
+    settle()
+    counts.asScala.collect { case (g, c) if g.startsWith(prefix) => c }
+      .foldLeft(Counts())(_ + _)
+  }
+
+  private def settle(): Unit = synchronized {
     var cur = events.get
     while (cur != settled) { settled = cur; Thread.sleep(300); cur = events.get }
-    counts.getOrDefault(group, Counts())
   }
 
   def close(): Unit = spark.sparkContext.removeSparkListener(this)

@@ -208,13 +208,18 @@ object ScaleCheck {
         dt
       }.min
 
+    // one untimed run before a leg's first timed reps: the body's cold
+    // cost (JIT, codegen) would otherwise land in its 1× time alone and
+    // read as negative scaling
+    def warm(build: => DataFrame, between: => Unit = Harness.release(spark)): Unit = {
+      Harness.scopedNoop(build)
+      between
+    }
+
     def run(name: String, dir: String): Double = timeMin(SparkEntry.queries(name)(spark, dir))
 
     val perQuery = Queries.filter(keep).map { q =>
-      // one untimed run at 1× first: the body's cold cost (JIT, codegen)
-      // would otherwise land in t1 alone and read as negative scaling
-      Harness.scopedNoop(SparkEntry.queries(q)(spark, d1))
-      Harness.release(spark)
+      warm(SparkEntry.queries(q)(spark, d1))
       val t1 = run(q, d1)
       val tN = run(q, dN)
       val exp = math.log(tN / t1) / math.log(copies.toDouble)
@@ -224,7 +229,7 @@ object ScaleCheck {
 
     // the documented-configuration kmeans point: stride √N-scaled so the
     // centroid count follows the C ≈ √N rule at N× data
-    def kmeansAt(dir: String, stride: Int): Double = timeMin {
+    def kmeans(dir: String, stride: Int): DataFrame = {
       val v = Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       val refined = ext.Similarity.refineCentroids(
@@ -232,8 +237,9 @@ object ScaleCheck {
       ext.Similarity.ivfTopKWith(v, refined, col("vec_id") < 20, nprobe = 2, k = 1)
     }
     val kmeansJson = if (!keep("kmeans")) None else {
-      val k1 = kmeansAt(d1, 25)
-      val kN = kmeansAt(dN, (25 * math.sqrt(copies.toDouble)).round.toInt)
+      warm(kmeans(d1, 25))
+      val k1 = timeMin(kmeans(d1, 25))
+      val kN = timeMin(kmeans(dN, (25 * math.sqrt(copies.toDouble)).round.toInt))
       val kExp = math.log(kN / k1) / math.log(copies.toDouble)
       System.err.println(f"[scale] kmeans_sqrt_stride t1=$k1%.2f s tN=$kN%.2f s exp=$kExp%.2f")
       Some(f""""kmeans_sqrt_stride":{"t1":$k1%.3f,"tN":$kN%.3f,"exp":$kExp%.2f}""")
@@ -267,6 +273,7 @@ object ScaleCheck {
         // copy 0 keeps original doc ids: the same 20 probe docs exist at
         // every size, so the batch is constant while the corpus grows
         val batch = docs.filter(col("doc_id") % 7 === 0 && col("doc_id") < 140)
+        warm(ext.SubstringIndex.probe(index, batch))
         val t = timeMin(ext.SubstringIndex.probe(index, batch))
         val df = ext.SubstringIndex.probe(index, batch)
         df.collect()
@@ -290,6 +297,9 @@ object ScaleCheck {
       val merges = 100
       val k = 8 // trainBatched batch size
       val docs1 = Tables.documents(spark, d1)
+      // one batch of merges warms both trainers' code paths
+      warm(ext.Bpe.train(docs1, k)._1)
+      warm(ext.Bpe.trainBatched(docs1, k, k)._1)
       val tSeq = timeMin(ext.Bpe.train(docs1, merges)._1)
       val tBat = timeMin(ext.Bpe.trainBatched(docs1, merges, k)._1)
       System.err.println(
@@ -328,8 +338,10 @@ object ScaleCheck {
       // evict it and the next rep would pay an in-region rebuild, so
       // between reps only garbage is collected (the scope already
       // released each rep's own caches)
-      val t = timeMin(ext.Similarity.annKnnClassify(index, corpus, probes, cents, cb,
-          nprobe = 3, shortlist = 24, k = 10), between = System.gc())
+      def serve = ext.Similarity.annKnnClassify(index, corpus, probes, cents, cb,
+        nprobe = 3, shortlist = 24, k = 10)
+      warm(serve, between = System.gc())
+      val t = timeMin(serve, between = System.gc())
       Harness.release(spark)
       t
     }

@@ -46,8 +46,6 @@ object GraphNormalizer {
   final case class Normalized(graph: Graph, kinds: Map[String, DataFrame]) {
     /** Per-pair link tables ([[linkTables]]); the JDBC staging path. */
     def links: Map[String, DataFrame] = linkTables(graph)
-    /** Kind tables plus per-pair link tables. */
-    def tables: Map[String, DataFrame] = kinds ++ links
   }
 
   /** Kind tables: project each node's JSON document onto the kind's declared
@@ -143,8 +141,8 @@ object GraphNormalizer {
     * directory into its `link_<f>_<t>` table. Returns the number of edges
     * written, observed on the write itself.
     */
-  def writeLinksPartitioned(g: Graph, path: String, format: String = "parquet",
-                            options: Map[String, String] = Map.empty): Long = {
+  def writeLinksPartitioned(g: Graph, path: String, format: String,
+                            options: Map[String, String]): Long = {
     val obs = Observation()
     resolvedEdges(g).observe(obs, count(lit(1)).as("rows"))
       .write.mode("overwrite").format(format).options(options)

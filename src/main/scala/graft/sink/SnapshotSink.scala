@@ -142,7 +142,7 @@ object SnapshotSink {
     * One Observation per write: the count rides the write job's
     * accumulators and is available the moment the write returns.
     */
-  private def writeTable(name: String, df: DataFrame, dest: Destination, runId: String): Long = {
+  private[graft] def writeTable(name: String, df: DataFrame, dest: Destination, runId: String): Long = {
     val obs = Observation()
     // only parquet files keep nested columns; csv and SQL get JSON text
     val nested = dest match { case ArrowDest(cfg) => cfg.format != "csv"; case _ => false }

@@ -410,39 +410,21 @@ class EnginePipelineSpec extends AnyFunSuite {
   test("a source's Spark jobs do not grow with its number of link pairs") {
     // one partitioned link write per source: 1 kind pair and 4 kind pairs
     // over the same kinds launch the same jobs in the run's groups
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val events = new java.util.concurrent.atomic.AtomicLong
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val group = Option(e.properties).map(_.getProperty("spark.jobGroup.id", "")).getOrElse("")
-        if (group.startsWith("graft-run-")) jobs.incrementAndGet()
-        events.incrementAndGet()
-      }
-      override def onOtherEvent(e: SparkListenerEvent): Unit = events.incrementAndGet()
-    }
-    def settled(): Long = {
-      // listener events post asynchronously: wait until none arrives for 500 ms
-      var seen = -1L
-      while (seen != events.get) { seen = events.get; Thread.sleep(500) }
-      jobs.get
-    }
     def jobsFor(pairs: Seq[(String, String)]): Long = {
       val scans = spark.sparkContext.longAccumulator("node-scans-jobs")
       val base = Files.createTempDirectory("graft-pair-jobs").toString
-      val before = settled()
-      val report = Runner.run(spark, GraftConfig(Map("p" -> Map.empty),
-        ArrowDest(FileDestination("parquet", base))), pairRegistry(pairGraph(pairs, scans)))
-      assert(report.totalEdges == pairs.size)
-      settled() - before
+      val counter = new JobCounter(spark)
+      try {
+        val report = Runner.run(spark, GraftConfig(Map("p" -> Map.empty),
+          ArrowDest(FileDestination("parquet", base))), pairRegistry(pairGraph(pairs, scans)))
+        assert(report.totalEdges == pairs.size)
+        counter.withPrefix("graft-run-").jobs
+      } finally counter.close()
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      jobsFor(allPairs) // warm: the first run may plan differently
-      val one = jobsFor(Seq("a" -> "b"))
-      val four = jobsFor(allPairs)
-      assert(one > 0 && one == four, s"1 link pair: $one jobs, 4 link pairs: $four jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    jobsFor(allPairs) // warm: the first run may plan differently
+    val one = jobsFor(Seq("a" -> "b"))
+    val four = jobsFor(allPairs)
+    assert(one > 0 && one == four, s"1 link pair: $one jobs, 4 link pairs: $four jobs")
   }
 
   test("nested tags survive as MapType in parquet, degrade to JSON in csv") {

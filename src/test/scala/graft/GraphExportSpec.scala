@@ -1,7 +1,8 @@
 package graft
 
-import graft.graph.GraphNormalizer
+import graft.graph.{Graph, GraphNormalizer}
 import graft.sources.ExampleSource
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,6 +17,14 @@ import scala.jdk.CollectionConverters._
   */
 class GraphExportSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
+
+  /** Every table staging would write: the kind tables and the per-pair
+    * link tables.
+    */
+  private def tablesOf(g: Graph): Map[String, DataFrame] = {
+    val n = GraphNormalizer.normalize(g)
+    n.kinds ++ n.links
+  }
 
   private def exportLines: Seq[String] = {
     val g = ExampleSource.collect(spark)
@@ -43,7 +52,7 @@ class GraphExportSpec extends AnyFunSuite {
     val g = GraphNormalizer.fromJsonExport(spark, dir.toString)
     assert(g.model.kinds.map(_.fqn).toSet == ExampleSource.model.kinds.map(_.fqn).toSet)
 
-    val tables = GraphNormalizer.normalize(g).tables
+    val tables = tablesOf(g)
     assert(tables.keySet == ExampleSource.expectedCounts.keySet)
     ExampleSource.expectedCounts.foreach { case (t, n) =>
       assert(tables(t).count() == n, s"table $t")
@@ -55,7 +64,7 @@ class GraphExportSpec extends AnyFunSuite {
 
   test("partitioned link write serves every pair with partition pruning") {
     val out = Files.createTempDirectory("graft-links").toString
-    GraphNormalizer.writeLinksPartitioned(ExampleSource.collect(spark), out)
+    GraphNormalizer.writeLinksPartitioned(ExampleSource.collect(spark), out, "parquet", Map.empty)
     val all = spark.read.parquet(out)
     // one dataset serves every link_<from>_<to> table of the oracle
     ExampleSource.expectedCounts.filter(_._1.startsWith("link_")).foreach { case (t, n) =>
@@ -244,7 +253,7 @@ class GraphExportSpec extends AnyFunSuite {
       Kind("user_record", KindModel.baseProperties)))
     val g = graft.graph.Graph(eventNodes.unionByName(userNodes), edges, model)
 
-    val tables = GraphNormalizer.normalize(g).tables
+    val tables = tablesOf(g)
     val nEvents = ev.count()
     val nUsers = ev.select("user_id").distinct().count()
     assert(tables("event_record").count() == nEvents)
@@ -268,8 +277,8 @@ class GraphExportSpec extends AnyFunSuite {
     // model travels with the export
     assert(back.model.kinds.map(_.fqn).toSet == g.model.kinds.map(_.fqn).toSet)
     // normalized output identical table-for-table
-    val t1 = GraphNormalizer.normalize(g).tables
-    val t2 = GraphNormalizer.normalize(back).tables
+    val t1 = tablesOf(g)
+    val t2 = tablesOf(back)
     assert(t1.keySet == t2.keySet)
     t1.keySet.foreach { t =>
       // set ops reject MapType (tags) — compare through the same canonical
@@ -301,7 +310,7 @@ class GraphExportSpec extends AnyFunSuite {
     assert(child.bases == Seq("resource_base"))
     assert(!back.model("resource_base").aggregateRoot)
     // inherited columns survive: the projected table has base + own props
-    val t = GraphNormalizer.normalize(back).tables
+    val t = tablesOf(back)
     assert(t.keySet == Set("child_thing"), s"unexpected tables: ${t.keySet}")
     val cols = t("child_thing").columns.toSet
     assert(Set("id", "name", "kind", "extra").subsetOf(cols), s"cols: $cols")
@@ -340,7 +349,7 @@ class GraphExportSpec extends AnyFunSuite {
     assert(bare.bases.isEmpty && bare.aggregateRoot && bare.properties.isEmpty)
     assert(!g.model("late_kind").aggregateRoot)
 
-    val tables = GraphNormalizer.normalize(g).tables
+    val tables = tablesOf(g)
     // non-root late_kind gets no table; property-less bare_kind projects an
     // empty schema and is counted by its rows
     assert(tables.keySet == Set("bare_kind", "thing", "link_thing_thing"),
@@ -444,7 +453,7 @@ class GraphExportSpec extends AnyFunSuite {
     Files.write(dir.resolve("graph.jsonl"), (exportLines :+ truncated).asJava)
     // default: the contract's drop — tables come out complete
     val g = GraphNormalizer.fromJsonExport(spark, dir.toString)
-    assert(GraphNormalizer.normalize(g).tables("example_region").count() == 2)
+    assert(tablesOf(g)("example_region").count() == 2)
     // strict: the first corrupt line aborts the ingest with the line text
     val e = intercept[IllegalArgumentException](
       GraphNormalizer.fromJsonExport(spark, dir.toString, strict = true))
@@ -472,6 +481,6 @@ class GraphExportSpec extends AnyFunSuite {
     assert(e.getMessage.contains("no kind records"))
     // explicit fallback model still works (library entry point)
     val g = GraphNormalizer.fromJsonExport(spark, dir.toString, Some(ExampleSource.model))
-    assert(GraphNormalizer.normalize(g).tables("example_region").count() == 2)
+    assert(tablesOf(g)("example_region").count() == 2)
   }
 }

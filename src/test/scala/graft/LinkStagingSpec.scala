@@ -165,7 +165,7 @@ class LinkStagingSpec extends AnyFunSuite {
     } finally c.close()
     // ... and the partitioned write (file and SQLite staging)
     val out = Files.createTempDirectory("graft-kindless-links").toString
-    assert(GraphNormalizer.writeLinksPartitioned(g, out) == 1)
+    assert(GraphNormalizer.writeLinksPartitioned(g, out, "parquet", Map.empty) == 1)
     val parts = new java.io.File(out).listFiles().map(_.getName).filter(_.startsWith("from_kind="))
     assert(parts.toSeq == Seq("from_kind=thing"), s"partitions: ${parts.mkString(", ")}")
     destinations("kindless").foreach { dest =>

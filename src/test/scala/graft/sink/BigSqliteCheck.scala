@@ -1,4 +1,5 @@
 package graft.sink
+import graft.config.SqliteDest
 import org.apache.spark.sql.SparkSession
 object BigSqliteCheck {
   def main(args: Array[String]): Unit = {
@@ -10,12 +11,8 @@ object BigSqliteCheck {
     val cfg = graft.config.SqliteDestination("/tmp/big.db")
     val li = graft.Tables.lineitem(spark, "/root/testdata/sf0.01")
     val ev = graft.Tables.events(spark, "/root/testdata/sf0.01")
-    // the SQLite staging layout: SQL-flattened parquet under <db>.staging/<runId>
     val tables = Map("lineitem" -> li, "events" -> ev)
-    tables.foreach { case (name, df) =>
-      SnapshotSink.flattenForSql(df).write.mode("overwrite")
-        .parquet(s"${cfg.database}.staging/bigrun/$name")
-    }
+    tables.foreach { case (name, df) => SnapshotSink.writeTable(name, df, SqliteDest(cfg), "bigrun") }
     println("staged: " + tables.keys.mkString(", "))
     SqliteSnapshotCommit(cfg, "bigrun", tables.keys.toSeq).commit(spark)
     println("committed " + new java.io.File("/tmp/big.db").length() + " bytes")
