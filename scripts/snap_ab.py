@@ -13,7 +13,9 @@ the session falls on both sides alike. Then it prints, for every end-to-end
 metric declared in BENCHMARK.json: each side's median [Q1, Q3], the change
 of the median, the pairs the change won, and whether the gap of the medians
 is larger than the parent's interquartile range, in the better direction.
-A run that fails or reports `correct: false` is named and left out.
+A run that fails or reports `correct: false` is named and its pair left
+out of the table; after the table the script lists every such run (seed and
+side) and exits 1.
 """
 import argparse
 import json
@@ -70,6 +72,7 @@ def main():
     tmp = tempfile.mkdtemp(prefix="snap_ab-")
     parent = os.path.join(tmp, "parent")
     runs = {"parent": [], "change": []}
+    failed = []
     try:
         os.mkdir(parent)
         archive = subprocess.Popen(["git", "archive", args.parent], cwd=ROOT,
@@ -87,6 +90,8 @@ def main():
                 m, err = run(tree, args.workload, seed, seconds)
                 print(f"[snap_ab] seed {seed} {name}: " +
                       (err or f"snapshot_s {m.get('snapshot_s', float('nan')):.3f}"), file=sys.stderr)
+                if err:
+                    failed.append(f"seed {seed} {name}: {err}")
                 pair[name] = m
             for name in runs:
                 runs[name].append((seed, pair[name]))
@@ -113,6 +118,11 @@ def main():
     widths = [max(len(r[i]) for r in rows) for i in range(len(rows[0]))]
     for r in rows:
         print("  ".join(c.ljust(w) for c, w in zip(r, widths)).rstrip())
+    if failed:
+        print(f"{len(failed)} failed or incorrect run(s):")
+        for f in failed:
+            print(f"  {f}")
+        sys.exit(1)
 
 
 if __name__ == "__main__":

@@ -353,13 +353,15 @@ object SubstringDedup {
         // order-exact: pos ∈ [1, PosEnc) (positions are 1-based string
         // offsets, far under 2⁴⁰), so d·PosEnc + p is strictly monotone
         // in (doc_id, pos) for any long doc_id, and pmod decodes exactly.
+        // doc_id decodes by integral `div` of the exact multiple f − pos,
+        // not decimal division, whose result type follows
+        // spark.sql.decimalOperations.allowPrecisionLoss.
         val firstOcc = pos.groupBy("h1", "h2")
           .agg(min(col("doc_id").cast("decimal(38,0)") * lit(PosEnc) + col("pos")).as("f"),
                count(lit(1)).as("cnt"))
           .filter(col("cnt") >= 2)
           .select(col("h1"), col("h2"),
-                  ((col("f") - pmod(col("f"), lit(PosEnc))) / lit(PosEnc))
-                    .cast("long").as("fd"),
+                  expr(s"(f - pmod(f, $PosEnc)) div $PosEnc").as("fd"),
                   pmod(col("f"), lit(PosEnc)).cast("long").as("fp"))
         pos.join(firstOcc, Seq("h1", "h2"))
           .filter(!(col("fd") === col("doc_id") && col("pos") === col("fp")) &&

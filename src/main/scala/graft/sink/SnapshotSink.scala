@@ -2,12 +2,14 @@ package graft.sink
 
 import graft.config.{ArrowDest, DbDest, Destination, FileDestination, JdbcDestination, SqliteDest}
 import graft.graph.{Graph, GraphNormalizer}
+import graft.model.KindModel
 import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
 
+import java.nio.charset.Charset
 import java.sql.DriverManager
 
 /** Snapshot-atomic sinks (SURVEY.md §4.4, reference collect.py:198-203):
@@ -86,9 +88,23 @@ object SnapshotSink {
     * A graph that cannot be staged at all (duplicate node ids, colliding
     * table names, a model that does not project) fails with
     * [[GraphNormalizer.InvalidGraphException]] before anything lands in
-    * `<runId>`.
+    * `<runId>`. A file or SQLite destination whose kind tables the JVM
+    * cannot name on disk fails there too, with an `IllegalStateException`
+    * ([[checkFileNames]]): that is the environment's fault, not the graph's.
     */
-  def stage(g: Graph, dest: Destination, runId: String): Staged = graft.CacheTracker.scope {
+  def stage(g: Graph, dest: Destination, runId: String): Staged =
+    stage(g, dest, runId, Charset.forName(System.getProperty("sun.jnu.encoding",
+      Charset.defaultCharset.name)))
+
+  /** [[stage]], with file and SQLite table names checked against
+    * `fileNames` instead of the JVM's file-name charset.
+    */
+  private[graft] def stage(g: Graph, dest: Destination, runId: String,
+                           fileNames: Charset): Staged = graft.CacheTracker.scope {
+    dest match {
+      case DbDest(_) => ()
+      case _ => checkFileNames(g.model, fileNames)
+    }
     val n = GraphNormalizer.normalize(g)
     val (links, edges) = dest match {
       case DbDest(_) =>
@@ -100,6 +116,28 @@ object SnapshotSink {
     }
     val kinds = n.kinds.map { case (name, df) => name -> writeTable(name, df, dest, runId) }
     Staged(kinds.keys.toSeq ++ links, kinds.values.sum, edges)
+  }
+
+  /** File and SQLite staging name a directory after every table, and a JVM
+    * creates only file names its `sun.jnu.encoding` can encode (ASCII under
+    * the POSIX locale). A root kind outside `charset` names a kind table, so
+    * it fails here, before anything is staged, rather than deep inside a
+    * write with `InvalidPathException: Malformed input`. The failure is an
+    * `IllegalStateException`, not an [[GraphNormalizer.InvalidGraphException]]:
+    * the same export stages under a UTF-8 locale, so streaming ingest must
+    * fail the batch and retry it rather than skip it. Link tables are named
+    * by the kinds of the nodes in the data, which may be non-root or absent
+    * from the model; those are known only after the link write, and a name
+    * among them outside `charset` still fails inside that write.
+    */
+  private[graft] def checkFileNames(model: KindModel, charset: Charset): Unit = {
+    val enc = charset.newEncoder()
+    model.kinds.filter(_.aggregateRoot).map(_.fqn).find(!enc.canEncode(_)).foreach { t =>
+      throw new IllegalStateException(
+        s"table `$t` cannot be staged: the JVM's file-name encoding " +
+          s"(sun.jnu.encoding = ${charset.name}) cannot encode its name; " +
+          "run the JVM under a UTF-8 locale, e.g. LC_ALL=C.UTF-8")
+    }
   }
 
   /** One partitioned write of every link table into a directory private to

@@ -208,6 +208,44 @@ class GraphExportSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("streaming ingest fails, never skips, an export whose kind the JVM cannot name on disk") {
+    val watch = Files.createTempDirectory("graft-ingest-charset")
+    val base = Files.createTempDirectory("graft-ingest-charset-dest").toString
+    val dest = graft.config.ArrowDest(graft.config.FileDestination("parquet", base))
+    val skipped = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val progress = new graft.engine.ProgressListener {
+      def progress(source: String, message: String): Unit =
+        if (message.contains("skipped")) skipped.add(message)
+    }
+    val q = graft.streaming.StreamingGraphIngest.run(spark, watch.toString, dest,
+      progress = progress)
+    // staging reads the file-name charset from this property on each call;
+    // the JVM's own file-name encoding was fixed at startup and stays UTF-8
+    val jnu = System.getProperty("sun.jnu.encoding")
+    try {
+      Files.write(watch.resolve("export1.jsonl"), exportLines.asJava)
+      q.processAllAvailable()
+      val regions = spark.read.parquet(s"$base/current/example_region").count()
+
+      System.setProperty("sun.jnu.encoding", "US-ASCII")
+      val unicode = Seq(
+        """{"type":"kind","fqn":"ü京","properties":[{"name":"id","kind":"string"}]}""",
+        """{"type":"node","id":"u1","kind":"ü京","reported":{"id":"u1"}}""")
+      Files.write(watch.resolve("export2.jsonl"), (exportLines ++ unicode).asJava)
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.processAllAvailable())
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(c => c.isInstanceOf[IllegalStateException] &&
+        c.getMessage.contains("sun.jnu.encoding = US-ASCII")), e.getMessage)
+      assert(skipped.isEmpty, skipped)
+      assert(spark.read.parquet(s"$base/current/example_region").count() == regions)
+      assert(!new java.io.File(s"$base/current/ü京").exists())
+    } finally {
+      if (jnu == null) System.clearProperty("sun.jnu.encoding")
+      else System.setProperty("sun.jnu.encoding", jnu)
+      q.stop()
+    }
+  }
+
   test("streaming ingest with failOnError fails the query on a duplicate-id export") {
     val watch = Files.createTempDirectory("graft-ingest-failfast")
     val base = Files.createTempDirectory("graft-ingest-failfast-dest").toString

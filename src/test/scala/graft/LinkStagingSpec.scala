@@ -124,6 +124,35 @@ class LinkStagingSpec extends AnyFunSuite {
     }
   }
 
+  test("a kind the file-name charset cannot encode fails before staging; the snapshot stays") {
+    val ascii = java.nio.charset.StandardCharsets.US_ASCII
+    val good = graph(Seq("p", "q"), Seq("p1" -> "p", "q1" -> "q"), Seq("p1" -> "q1"))
+    val unicode = graph(Seq("p", "ü京"), Seq("p1" -> "p", "u1" -> "ü京"), Seq("p1" -> "u1"))
+    destinations("charset").foreach { dest =>
+      run(good, dest)
+      val before = committed(dest, Set("p", "q", "link_p_q"))
+      val e = intercept[IllegalStateException](
+        sink.SnapshotSink.stage(unicode, dest, "run-ascii", ascii))
+      assert(e.getMessage.contains("table `ü京`") && e.getMessage.contains("sun.jnu.encoding = US-ASCII"),
+        e.getMessage)
+      val staging = dest match {
+        case ArrowDest(cfg) => s"${cfg.path}/_staging"
+        case SqliteDest(cfg) => s"${cfg.database}.staging"
+        case other => fail(s"no staging for $other")
+      }
+      assert(!new java.io.File(s"$staging/run-ascii").exists(), s"$dest: staged before the check")
+      assert(committed(dest, Set("p", "q", "link_p_q")) == before, s"$dest: snapshot changed")
+      noPrivateLinkDirs(dest)
+    }
+    // a non-root kind names no kind table and is not checked (a node of
+    // that kind with an edge would still name a link table, found only
+    // by the link write); a charset that encodes every root kind passes
+    val nonRoot = KindModel(Seq(Kind("p", KindModel.baseProperties),
+      Kind("ü", KindModel.baseProperties, aggregateRoot = false)))
+    sink.SnapshotSink.checkFileNames(nonRoot, ascii)
+    sink.SnapshotSink.checkFileNames(unicode.model, java.nio.charset.StandardCharsets.UTF_8)
+  }
+
   test("a source without edges stages its kind tables and no link table") {
     val g = graph(Seq("p", "q"), Seq("p1" -> "p", "q1" -> "q"), Nil)
     destinations("no-edges").foreach { dest =>

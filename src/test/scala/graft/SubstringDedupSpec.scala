@@ -386,6 +386,37 @@ class SubstringDedupSpec extends AnyFunSuite {
     assert(clean.lastIndexOf(rep.take(16)) === 0) // the second copy is gone
   }
 
+  test("selfDedupCut's first-occurrence decode does not depend on allowPrecisionLoss") {
+    import spark.implicits._
+    val x = noise(60)
+    // doc_ids near both ends of the long range: doc_id·2⁴⁰ + pos needs 38
+    // decimal digits, and the decode must stay exact whichever decimal
+    // typing rule the session selects
+    val ids = Seq(-4000000000000000003L, 4000000000000000001L, Long.MaxValue - 1)
+    // around x, letters no other doc and x use: no k-gram across x's ends
+    // is shared, so exactly x is cut from the later copies
+    def own(n: Int, from: Char) = Seq.fill(n)((from + rnd.nextInt(4)).toChar).mkString
+    val docs = ids.zipWithIndex.map { case (id, i) =>
+      (id, own(20, ('A' + 8 * i).toChar) + x + own(10, ('E' + 8 * i).toChar))
+    }.toDF("doc_id", "text")
+    val key = "spark.sql.decimalOperations.allowPrecisionLoss"
+    val saved = spark.conf.getOption(key)
+    def cut(allow: Boolean) = {
+      spark.conf.set(key, allow.toString)
+      SubstringDedup.selfDedupCut(docs, k = 16).collect()
+        .map(r => r.getLong(0) -> r.getString(1).length).toMap
+    }
+    try {
+      val lossy = cut(allow = true)
+      // the least doc_id holds the first occurrence and stays whole
+      assert(lossy == Map(ids(0) -> 90, ids(1) -> 30, ids(2) -> 30))
+      assert(cut(allow = false) == lossy)
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("duplication profile: ppm fraction and zero rows for clean docs") {
     import spark.implicits._
     val shared = noise(50)
