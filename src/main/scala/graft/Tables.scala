@@ -2,6 +2,7 @@ package graft
 
 import scala.util.control.NonFatal
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
 import org.apache.parquet.hadoop.Footer
@@ -53,11 +54,34 @@ object Tables {
     * directory with no data file or with subdirectories (partitions), and
     * a footer that does not parse.
     */
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    footerSchema(spark, path) match {
-      case Some(schema) => spark.read.schema(schema).parquet(path)
-      case None         => spark.read.parquet(path)
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val sqlConf = spark.sessionState.conf
+    val schema =
+      if (sqlConf.isParquetSchemaMergingEnabled || path.exists("{}[]*?\\".contains(_))) None
+      else try {
+        val (hadoopConf, listed) = listing(spark, path)
+        if (listed.exists(_.isDirectory)) None else footerSchema(spark, hadoopConf, listed)
+      } catch { case NonFatal(_) => None }
+    schema match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None    => spark.read.parquet(path)
     }
+  }
+
+  /** The data files of the parquet file or directory `path`, in path order,
+    * and their schema from one footer read in the calling process, picked
+    * and converted as [[readParquet]] does. Subdirectories are not part of
+    * it: this is a staged table, and a staged table's directory holds
+    * another table's only when one kind name is a path prefix of another.
+    * None when no file holds a footer; a missing path or a footer that
+    * does not parse throws.
+    */
+  private[graft] def parquetFiles(spark: SparkSession,
+                                  path: String): Option[(StructType, Seq[FileStatus])] = {
+    val (hadoopConf, listed) = listing(spark, path)
+    val files = listed.filterNot(_.isDirectory)
+    footerSchema(spark, hadoopConf, files).map(_ -> files.filter(dataFile))
+  }
 
   private val SummaryFiles = Set("_common_metadata", "_metadata")
 
@@ -68,30 +92,40 @@ object Tables {
     !exclude || name.startsWith("_common_metadata") || name.startsWith("_metadata")
   }
 
-  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
-    val sqlConf = spark.sessionState.conf
-    if (sqlConf.isParquetSchemaMergingEnabled || path.exists("{}[]*?\\".contains(_)))
-      return None
+  // the files of a listing a scan reads (PartitioningAwareFileIndex)
+  private def dataFile(f: FileStatus): Boolean = {
+    val name = f.getPath.getName
+    !((name.startsWith("_") && !name.contains("=")) || name.startsWith(".")) && f.getLen > 0
+  }
+
+  /** `path` as Spark's listing sees it, in path order: the entries of a
+    * directory, or the file itself.
+    */
+  private def listing(spark: SparkSession, path: String): (Configuration, Seq[FileStatus]) = {
     val hadoopConf = spark.sessionState.newHadoopConf()
-    try {
-      val p = new Path(path)
-      val fs = p.getFileSystem(hadoopConf)
-      val root = fs.getFileStatus(p)
-      val listed: Seq[FileStatus] =
-        (if (root.isDirectory) fs.listStatus(p).toSeq else Seq(root))
-          .filter(f => listedName(f.getPath.getName))
-      if (listed.exists(_.isDirectory)) return None
-      val files = listed.sortBy(_.getPath.toString)
-      def named(n: String) = files.find(_.getPath.getName == n)
-      val pick = named("_common_metadata").orElse(named("_metadata"))
-        .orElse(files.find(f => !SummaryFiles(f.getPath.getName)))
-      pick.map { f =>
-        val footer = ParquetFooterReader.readFooter(
-          HadoopInputFile.fromStatus(f, hadoopConf), SKIP_ROW_GROUPS)
-        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
-          new ParquetToSparkSchemaConverter(sqlConf))
-      }
-    } catch { case NonFatal(_) => None }
+    val p = new Path(path)
+    val fs = p.getFileSystem(hadoopConf)
+    val root = fs.getFileStatus(p)
+    val listed = (if (root.isDirectory) fs.listStatus(p).toSeq else Seq(root))
+      .filter(f => listedName(f.getPath.getName))
+    (hadoopConf, listed.sortBy(_.getPath.toString))
+  }
+
+  /** The schema from the footer Spark's non-merging inference reads among
+    * `files`: a `_common_metadata` summary, else `_metadata`, else the first
+    * data file; None when there is none.
+    */
+  private def footerSchema(spark: SparkSession, hadoopConf: Configuration,
+                           files: Seq[FileStatus]): Option[StructType] = {
+    def named(n: String) = files.find(_.getPath.getName == n)
+    val pick = named("_common_metadata").orElse(named("_metadata"))
+      .orElse(files.find(f => !SummaryFiles(f.getPath.getName)))
+    pick.map { f =>
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(f, hadoopConf), SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    }
   }
 
   /** Spread a SMALL input across the cluster before a CPU-heavy per-row

@@ -59,7 +59,9 @@ object NoopEventSender extends AnalyticsEventSender {
   * swap (K2). Any failure → no swap, previous snapshot intact (K3).
   */
 object Runner {
-  val SourceParallelism = 4 // reference max_workers=4 (collect.py:186)
+  // reference max_workers=4 (collect.py:186); also bounds the concurrent
+  // table writes of each source (SnapshotSink.stage)
+  val SourceParallelism = 4
 
   def run(
       spark: SparkSession,

@@ -67,6 +67,15 @@ object QualityClassifier {
   /** Train [[Rounds]] GD steps; returns (weights dense over 0..D-1, bias).
     * All arithmetic happens in-engine; the driver only holds the D-row
     * update between rounds.
+    *
+    * `doc_id` must be unique in `docs`; it is not checked, since a check
+    * would cost a pass over the corpus. Rows that share a `doc_id` train
+    * as one document: with the same `source`, their texts are pooled into
+    * one term distribution; across sources, each row's term frequencies
+    * are divided by their combined token count, every term takes the
+    * residual of both rows, and the gradient normalizer counts the id
+    * twice where the DuckDB oracle counts it once, so the weights no
+    * longer match the oracle.
     */
   def train(docs: DataFrame, rounds: Int = Rounds,
             eta: Double = Eta): (IndexedSeq[Double], Double) = {

@@ -3,14 +3,16 @@ package graft.sink
 import graft.config.{ArrowDest, DbDest, Destination, FileDestination, JdbcDestination, SqliteDest}
 import graft.graph.{Graph, GraphNormalizer}
 import graft.model.KindModel
-import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
 
 import java.nio.charset.Charset
+import java.nio.file.InvalidPathException
 import java.sql.DriverManager
+import java.util.concurrent.{ExecutionException, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
 
 /** Snapshot-atomic sinks (SURVEY.md §4.4, reference collect.py:198-203):
   * every run writes to a staging area; only after ALL tables of ALL sources
@@ -26,10 +28,12 @@ import java.sql.DriverManager
   *    RENAME DDL per table (dialect-specific), mirroring [D]
   *    `SqlUpdater.swap_temp_tables`.
   *
-  * [[stage]] writes one source: one write per kind table, and for file and
-  * SQLite targets ONE partitioned write of all link tables into a directory
-  * private to the source, whose pair directories are renamed into
-  * `<runId>/link_<f>_<t>`.
+  * [[stage]] writes one source: its link tables and one write per kind
+  * table, all running at once on a bounded pool. File and SQLite targets
+  * write every link table in ONE partitioned write, and write everything
+  * into a directory private to the source; each table is renamed into
+  * `<runId>` only once every write has succeeded and the link names have
+  * passed their checks.
   */
 object SnapshotSink {
 
@@ -88,8 +92,8 @@ object SnapshotSink {
     * A graph that cannot be staged at all (duplicate node ids, colliding
     * table names, a model that does not project) fails with
     * [[GraphNormalizer.InvalidGraphException]] before anything lands in
-    * `<runId>`. A file or SQLite destination whose kind tables the JVM
-    * cannot name on disk fails there too, with an `IllegalStateException`
+    * `<runId>`. A file or SQLite destination whose tables the JVM cannot
+    * name on disk fails there too, with an `IllegalStateException`
     * ([[checkFileNames]]): that is the environment's fault, not the graph's.
     */
   def stage(g: Graph, dest: Destination, runId: String): Staged =
@@ -106,81 +110,150 @@ object SnapshotSink {
       case _ => checkFileNames(g.model, fileNames)
     }
     val n = GraphNormalizer.normalize(g)
-    val (links, edges) = dest match {
+    val kinds = n.kinds.toSeq
+    // the write thunks are built in this method, so the stack of the pool
+    // thread that runs one (Spark's call site for its jobs) names `stage`
+    dest match {
       case DbDest(_) =>
         // JDBC cannot rename directories into tables: per-pair writes off
         // the scoped resolved edge set, names checked before any write
-        val staged = n.links.map { case (name, df) => name -> writeTable(name, df, dest, runId) }
-        (staged.keys.toSeq, staged.values.sum)
-      case _ => stageLinks(n, fileStaging(dest), runId)
-    }
-    val kinds = n.kinds.map { case (name, df) => name -> writeTable(name, df, dest, runId) }
-    Staged(kinds.keys.toSeq ++ links, kinds.values.sum, edges)
-  }
-
-  /** File and SQLite staging name a directory after every table, and a JVM
-    * creates only file names its `sun.jnu.encoding` can encode (ASCII under
-    * the POSIX locale). A root kind outside `charset` names a kind table, so
-    * it fails here, before anything is staged, rather than deep inside a
-    * write with `InvalidPathException: Malformed input`. The failure is an
-    * `IllegalStateException`, not an [[GraphNormalizer.InvalidGraphException]]:
-    * the same export stages under a UTF-8 locale, so streaming ingest must
-    * fail the batch and retry it rather than skip it. Link tables are named
-    * by the kinds of the nodes in the data, which may be non-root or absent
-    * from the model; those are known only after the link write, and a name
-    * among them outside `charset` still fails inside that write.
-    */
-  private[graft] def checkFileNames(model: KindModel, charset: Charset): Unit = {
-    val enc = charset.newEncoder()
-    model.kinds.filter(_.aggregateRoot).map(_.fqn).find(!enc.canEncode(_)).foreach { t =>
-      throw new IllegalStateException(
-        s"table `$t` cannot be staged: the JVM's file-name encoding " +
-          s"(sun.jnu.encoding = ${charset.name}) cannot encode its name; " +
-          "run the JVM under a UTF-8 locale, e.g. LC_ALL=C.UTF-8")
+        val links = n.links.toSeq
+        val (edges, nodes) = concurrently((links ++ kinds).map { case (name, df) =>
+          () => writeTable(df, dest, s"${name}__tmp")
+        }).splitAt(links.size)
+        Staged(kinds.map(_._1) ++ links.map(_._1), nodes.sum, edges.sum)
+      case _ =>
+        // every table into a directory private to this source, renamed
+        // into the run only after all writes succeeded ([[moveIntoRun]])
+        val to = fileStaging(dest)
+        val own = new Path(s"${to.root}/$runId.links-${java.util.UUID.randomUUID().toString.take(8)}")
+        val fs = own.getFileSystem(g.nodes.sparkSession.sparkContext.hadoopConfiguration)
+        try {
+          val linkWrite = () =>
+            try GraphNormalizer.writeLinksPartitioned(n.graph, s"$own/links", to.format, to.options)
+            catch { case e: Exception => throw unencodablePath(e, fileNames).getOrElse(e) }
+          val (edges, nodes) = concurrently(linkWrite +: kinds.zipWithIndex.map {
+            case ((_, df), i) => () => writeTable(df, dest, s"$own/kinds/$i")
+          }).splitAt(1)
+          val links = moveIntoRun(fs, own, s"${to.root}/$runId", kinds.map(_._1), g.model, fileNames)
+          Staged(kinds.map(_._1) ++ links, nodes.sum, edges.sum)
+        } finally fs.delete(own, true)
     }
   }
 
-  /** One partitioned write of every link table into a directory private to
-    * this source (a sibling of the run directory, so it is never promoted
-    * and can never collide with a table name); the listing of its pair
-    * directories is checked ([[GraphNormalizer.linkNames]]) before each is
-    * renamed to `<runId>/link_<f>_<t>`. The private directory is removed
-    * either way. Returns the link table names and the observed edge count.
+  /** Move what one source wrote into its private directory `own` (a
+    * sibling of the run directory, so never promoted and never a table
+    * name) into `runDir`. The link write is under `links/`, the i-th kind
+    * under `kinds/<i>`, so no two concurrent writes nest even when one kind
+    * name is a path prefix of another. The listing of the link write's pair
+    * directories is checked first — [[GraphNormalizer.linkNames]], then
+    * [[checkFileNames]] on the names it gives — so a failing graph lands
+    * nothing in `runDir`. Returns the link table names.
     */
-  private def stageLinks(n: GraphNormalizer.Normalized, to: FileStaging,
-                         runId: String): (Seq[String], Long) = {
-    val runDir = s"${to.root}/$runId"
-    val links = new Path(s"$runDir.links-${java.util.UUID.randomUUID().toString.take(8)}")
-    val fs = links.getFileSystem(n.graph.nodes.sparkSession.sparkContext.hadoopConfiguration)
+  private def moveIntoRun(fs: FileSystem, own: Path, runDir: String, kinds: Seq[String],
+                          model: KindModel, fileNames: Charset): Seq[String] = {
+    def values(dir: Path, column: String) =
+      fs.listStatus(dir).toSeq.map(_.getPath).filter(_.getName.startsWith(s"$column="))
+        .map(p => ExternalCatalogUtils.unescapePathName(p.getName.stripPrefix(s"$column=")) -> p)
+    val pairs = for {
+      (f, fDir) <- values(new Path(own, "links"), "from_kind")
+      (t, tDir) <- values(fDir, "to_kind")
+    } yield ((f, t), tDir)
+    val names = GraphNormalizer.linkNames(model, pairs.map(_._1))
+    checkFileNames(names, fileNames)
+    // the same path string a per-table write into the run would use;
+    // replaces a table of that name a replayed run staged before
+    def move(name: String, dir: Path): Path = {
+      val table = new Path(s"$runDir/$name")
+      if (fs.exists(table)) fs.delete(table, true)
+      fs.mkdirs(table.getParent)
+      require(fs.rename(dir, table), s"could not move $dir to $table")
+      table
+    }
+    // by name, so a kind whose name is a path prefix of another's lands
+    // first and the other nests in it instead of being replaced by it
+    kinds.zipWithIndex.sortBy(_._1).foreach { case (name, i) => move(name, new Path(s"$own/kinds/$i")) }
+    names.zip(pairs).foreach { case (name, (_, dir)) =>
+      // the completion marker a per-table write leaves in its directory
+      fs.create(new Path(move(name, dir), "_SUCCESS")).close()
+    }
+    names
+  }
+
+  /** Run `writes` concurrently and return their results in order. The pool
+    * (at most [[graft.engine.Runner.SourceParallelism]] threads) is created
+    * here and its threads started on the calling thread, so they inherit
+    * its Spark job group — the run's cancellation and job accounting still
+    * see every write — and its cache scope. Every write ends, failed or
+    * not, before this returns, so none still runs when the caller's scope
+    * releases its caches or its private directory is deleted. The first
+    * failure in `writes` order is rethrown as thrown, the others attached
+    * to it as suppressed. An interrupt of the calling thread shuts the pool
+    * down, interrupting the writes.
+    */
+  private def concurrently(writes: Seq[() => Long]): Seq[Long] = {
+    val size = math.max(1, math.min(writes.size, graft.engine.Runner.SourceParallelism))
+    val pool = new ThreadPoolExecutor(size, size, 0L, TimeUnit.MILLISECONDS,
+      new LinkedBlockingQueue[Runnable]())
+    pool.prestartAllCoreThreads()
     try {
-      val edges = GraphNormalizer.writeLinksPartitioned(n.graph, links.toString, to.format, to.options)
-      def values(dir: Path, column: String) =
-        fs.listStatus(dir).toSeq.map(_.getPath).filter(_.getName.startsWith(s"$column="))
-          .map(p => ExternalCatalogUtils.unescapePathName(p.getName.stripPrefix(s"$column=")) -> p)
-      val pairs = for {
-        (f, fDir) <- values(links, "from_kind")
-        (t, tDir) <- values(fDir, "to_kind")
-      } yield ((f, t), tDir)
-      val names = GraphNormalizer.linkNames(n.graph.model, pairs.map(_._1))
-      names.zip(pairs).foreach { case (name, (_, dir)) =>
-        // the same path string a per-table write would use; replaces a
-        // table of that name a replayed run staged before
-        val table = new Path(s"$runDir/$name")
-        if (fs.exists(table)) fs.delete(table, true)
-        fs.mkdirs(table.getParent)
-        require(fs.rename(dir, table), s"could not move $dir to $table")
-        // the completion marker a per-table write leaves in its directory
-        fs.create(new Path(table, "_SUCCESS")).close()
+      val results = writes.map(w => pool.submit[Long](() => w())).map { f =>
+        try Right(f.get()) catch { case e: ExecutionException => Left(e.getCause) }
       }
-      (names, edges)
-    } finally fs.delete(links, true)
+      results.collect { case Left(e) => e } match {
+        case first +: rest =>
+          rest.filterNot(_ eq first).foreach(first.addSuppressed)
+          throw first
+        case _ => results.collect { case Right(r) => r }
+      }
+    } finally pool.shutdownNow()
   }
 
-  /** Write one table into the run's staging; returns its observed rows.
-    * One Observation per write: the count rides the write job's
-    * accumulators and is available the moment the write returns.
+  /** Fail unless `charset` encodes every table name. File and SQLite
+    * staging name a directory after every table, and a JVM creates only
+    * file names its `sun.jnu.encoding` can encode (ASCII under the POSIX
+    * locale). Kind tables are named by the model's root kinds, checked here
+    * before anything is written; link tables by the kinds of the nodes in
+    * the data, which may be non-root or absent from the model, checked on
+    * the link write's listing before anything lands in the run
+    * ([[moveIntoRun]]). The failure is an `IllegalStateException`, not an
+    * [[GraphNormalizer.InvalidGraphException]]: the same export stages
+    * under a UTF-8 locale, so streaming ingest must fail the batch and
+    * retry it rather than skip it.
     */
-  private[graft] def writeTable(name: String, df: DataFrame, dest: Destination, runId: String): Long = {
+  private[graft] def checkFileNames(model: KindModel, charset: Charset): Unit =
+    checkFileNames(model.kinds.filter(_.aggregateRoot).map(_.fqn), charset)
+
+  private def checkFileNames(tables: Seq[String], charset: Charset): Unit = {
+    val enc = charset.newEncoder()
+    tables.find(!enc.canEncode(_)).foreach(t => throw unencodable(s"table `$t`", charset))
+  }
+
+  private def unencodable(what: String, charset: Charset, cause: Throwable = null) =
+    new IllegalStateException(s"$what cannot be staged: the JVM's file-name encoding " +
+      s"(sun.jnu.encoding = ${charset.name}) cannot encode its name; " +
+      "run the JVM under a UTF-8 locale, e.g. LC_ALL=C.UTF-8", cause)
+
+  /** The charset failure behind `e`, if a path in its cause chain could not
+    * be created because `charset` cannot encode it: under the POSIX locale
+    * the link write fails this way on a data kind outside ASCII, before its
+    * listing can be checked.
+    */
+  private[graft] def unencodablePath(e: Throwable, charset: Charset): Option[IllegalStateException] = {
+    val enc = charset.newEncoder()
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).collectFirst {
+      case p: InvalidPathException if !enc.canEncode(p.getInput) =>
+        unencodable("a link table", charset, e)
+    }
+  }
+
+  /** Write `df` to `target` in the destination's staging — the JDBC table
+    * of that name, or the directory at that path for a file or SQLite
+    * destination — and return its observed rows. One Observation per
+    * write: the count rides the write job's accumulators and is available
+    * the moment the write returns.
+    */
+  private[graft] def writeTable(df: DataFrame, dest: Destination, target: String): Long = {
     val obs = Observation()
     // only parquet files keep nested columns; csv and SQL get JSON text
     val nested = dest match { case ArrowDest(cfg) => cfg.format != "csv"; case _ => false }
@@ -190,7 +263,7 @@ object SnapshotSink {
         val w = out.write.mode("overwrite")
           .format("jdbc")
           .option("url", cfg.url)
-          .option("dbtable", s"${name}__tmp")
+          .option("dbtable", target)
           .option("batchsize", cfg.batchSize)
         cfg.user.foreach(w.option("user", _))
         cfg.password.foreach(w.option("password", _))
@@ -200,8 +273,7 @@ object SnapshotSink {
         w.save()
       case _ =>
         val to = fileStaging(dest)
-        out.write.mode("overwrite").format(to.format).options(to.options)
-          .save(s"${to.root}/$runId/$name")
+        out.write.mode("overwrite").format(to.format).options(to.options).save(target)
     }
     obs.get("rows").asInstanceOf[Long]
   }
@@ -308,7 +380,6 @@ trait SnapshotCommit { def commit(spark: SparkSession): Unit }
   * leaves either the old or the new directory complete and recoverable.
   */
 object DirSwap {
-  import org.apache.hadoop.fs.FileSystem
 
   /** Recover from a previous swap's crash window: a leftover `retired`
     * next to a MISSING live dir is the only copy — restore it; next to a

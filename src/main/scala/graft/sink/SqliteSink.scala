@@ -1,7 +1,12 @@
 package graft.sink
 
 import graft.config.SqliteDestination
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
 
 import java.io.File
@@ -82,12 +87,16 @@ object SqliteDdl {
 
 /** Snapshot commit for the native SQLite destination. Tables were staged as
   * parquet (full write parallelism, observed row counts); the commit — the
-  * inherently single-file, single-writer step — streams each staged table
-  * through `toLocalIterator` (bounded driver memory: one partition at a
-  * time) into a fresh database file, then atomically renames it over the
-  * destination. Readers therefore always see a complete snapshot: stronger
-  * than the reference's per-table temp-swap, same observable guarantee (K2),
-  * and a failed run leaves the previous database untouched (K3).
+  * inherently single-file, single-writer step — reads each staged table in
+  * this process, with no Spark job: the schema from one footer
+  * ([[graft.Tables.parquetFiles]]), then each data file in path order
+  * through Spark's own parquet reader, one file open at a time, its rows
+  * turned back into `Row`s by the encoder `collect()` uses. Memory stays
+  * bounded by one reader batch. The rows go into a fresh database file,
+  * which is then atomically renamed over the destination. Readers therefore
+  * always see a complete snapshot: stronger than the reference's per-table
+  * temp-swap, same observable guarantee (K2), and a failed run leaves the
+  * previous database untouched (K3).
   */
 final case class SqliteSnapshotCommit(cfg: SqliteDestination, runId: String,
                                       tables: Seq[String]) extends SnapshotCommit {
@@ -99,12 +108,18 @@ final case class SqliteSnapshotCommit(cfg: SqliteDestination, runId: String,
     val writer = new SqliteDbWriter(tmp)
     try {
       tables.sorted.foreach { t =>
-        val df = graft.Tables.readParquet(spark, s"$stagingDir/$t")
-        val tw = writer.table(t, SqliteDdl.createTable(t, df.schema))
-        val it = df.toLocalIterator()
-        while (it.hasNext) {
-          val row = it.next()
-          tw.addRow(row.toSeq.map(SqliteDdl.toStorage))
+        val (schema, files) = graft.Tables.parquetFiles(spark, s"$stagingDir/$t").getOrElse(
+          throw new IllegalStateException(s"staged table `$t` ($stagingDir/$t) has no parquet file"))
+        val tw = writer.table(t, SqliteDdl.createTable(t, schema))
+        val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
+          new StructType(), schema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+          spark.sessionState.newHadoopConf())
+        val toRow = ExpressionEncoder(schema).resolveAndBind().createDeserializer()
+        files.foreach { f =>
+          val rows = read(PartitionedFile(InternalRow.empty, SparkPath.fromFileStatus(f), 0,
+            f.getLen, Array.empty, f.getModificationTime, f.getLen))
+          try rows.foreach(r => tw.addRow(toRow(r).toSeq.map(SqliteDdl.toStorage)))
+          finally rows match { case c: java.io.Closeable => c.close(); case _ => () }
         }
       }
       writer.close()

@@ -53,6 +53,15 @@ class LinkStagingSpec extends AnyFunSuite {
                    else spark.read.parquet(path)
           t -> df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
         }.toMap
+      case DbDest(cfg) =>
+        val c = java.sql.DriverManager.getConnection(cfg.url)
+        try tables.map { t =>
+          val rs = c.createStatement().executeQuery(s"SELECT * FROM $t")
+          val n = rs.getMetaData.getColumnCount
+          t -> Iterator.continually(rs).takeWhile(_.next())
+            .map(r => (1 to n).map(r.getString).mkString("|")).toSeq.sorted
+        }.toMap
+        finally c.close()
       case other => fail(s"no reader for $other")
     }
 
@@ -62,16 +71,21 @@ class LinkStagingSpec extends AnyFunSuite {
       SqliteDest(SqliteDestination(s"${dir()}/c2s.db")))
   }
 
+  /** What a file or SQLite destination's staging root holds. */
+  private def staged(dest: Destination): Seq[String] = {
+    val root = dest match {
+      case ArrowDest(cfg)  => new java.io.File(s"${cfg.path}/_staging")
+      case SqliteDest(cfg) => new java.io.File(s"${cfg.database}.staging")
+      case _               => return Nil
+    }
+    Option(root.listFiles()).getOrElse(Array.empty).map(_.getName).toSeq
+  }
+
   /** No staging leftovers next to the run directories: the private link
     * directory is removed whether its source staged or failed.
     */
   private def noPrivateLinkDirs(dest: Destination): Unit = {
-    val root = dest match {
-      case ArrowDest(cfg)  => new java.io.File(s"${cfg.path}/_staging")
-      case SqliteDest(cfg) => new java.io.File(s"${cfg.database}.staging")
-      case _               => return
-    }
-    val left = Option(root.listFiles()).getOrElse(Array.empty).map(_.getName)
+    val left = staged(dest)
     assert(!left.exists(_.contains(".links-")), s"private link dir left behind: ${left.mkString(", ")}")
   }
 
@@ -144,13 +158,100 @@ class LinkStagingSpec extends AnyFunSuite {
       assert(committed(dest, Set("p", "q", "link_p_q")) == before, s"$dest: snapshot changed")
       noPrivateLinkDirs(dest)
     }
-    // a non-root kind names no kind table and is not checked (a node of
-    // that kind with an edge would still name a link table, found only
-    // by the link write); a charset that encodes every root kind passes
+    // a non-root kind names no kind table and is not checked up front (a
+    // node of that kind with an edge names a link table, checked on the
+    // link write's listing: next test); a charset that encodes every root
+    // kind passes
     val nonRoot = KindModel(Seq(Kind("p", KindModel.baseProperties),
       Kind("ü", KindModel.baseProperties, aggregateRoot = false)))
     sink.SnapshotSink.checkFileNames(nonRoot, ascii)
     sink.SnapshotSink.checkFileNames(unicode.model, java.nio.charset.StandardCharsets.UTF_8)
+  }
+
+  test("a data kind the file-name charset cannot encode names no link table; the snapshot stays") {
+    val ascii = java.nio.charset.StandardCharsets.US_ASCII
+    val good = graph(Seq("p", "q"), Seq("p1" -> "p", "q1" -> "q"), Seq("p1" -> "q1"))
+    // ü京 is no root kind, so it names no kind table, but p1 -> u1 names
+    // link_p_ü京, known only from the link write's listing
+    val linked = graph(Seq("p"), Seq("p1" -> "p", "u1" -> "ü京"), Seq("p1" -> "u1")).copy(
+      model = KindModel(Seq(Kind("p", KindModel.baseProperties),
+        Kind("ü京", KindModel.baseProperties, aggregateRoot = false))))
+    destinations("charset-link").foreach { dest =>
+      run(good, dest)
+      val before = committed(dest, Set("p", "q", "link_p_q"))
+      val e = intercept[IllegalStateException](
+        sink.SnapshotSink.stage(linked, dest, "run-ascii", ascii))
+      assert(e.getMessage.contains("table `link_p_ü京`") &&
+        e.getMessage.contains("sun.jnu.encoding = US-ASCII"), e.getMessage)
+      assert(!staged(dest).contains("run-ascii"), s"$dest: staged before the check")
+      assert(committed(dest, Set("p", "q", "link_p_q")) == before, s"$dest: snapshot changed")
+      noPrivateLinkDirs(dest)
+    }
+  }
+
+  test("a path the charset cannot encode failing inside the link write fails as the charset") {
+    // under the POSIX locale the partitioned link write itself fails on a
+    // data kind outside ASCII, before its listing can be checked
+    import java.nio.charset.StandardCharsets.{US_ASCII, UTF_8}
+    import java.nio.file.InvalidPathException
+    val malformed = new InvalidPathException("/s/r.links-1/links/from_kind=p/to_kind=ü京",
+      "Malformed input or input contains unmappable characters")
+    val failed = new org.apache.spark.SparkException("Job aborted",
+      new RuntimeException("task failed", malformed))
+    val e = sink.SnapshotSink.unencodablePath(failed, US_ASCII)
+    assert(e.exists(_.getMessage.contains("sun.jnu.encoding = US-ASCII")), e)
+    assert(e.exists(_.getCause eq failed))
+    // a path the charset encodes (a NUL, say) fails for another reason
+    val nul = new InvalidPathException("/s/a\u0000b", "Nul character not allowed")
+    assert(sink.SnapshotSink.unencodablePath(new RuntimeException(nul), US_ASCII).isEmpty)
+    assert(sink.SnapshotSink.unencodablePath(failed, UTF_8).isEmpty)
+  }
+
+  test("a failing kind write lands nothing, ends its sibling writes first and leaves no cache") {
+    val good = graph(Seq("p", "q"), Seq("p1" -> "p", "q1" -> "q"), Seq("p1" -> "q1"))
+    // q2's document is not JSON: under FAILFAST the write of kind q fails
+    // while the write of kind p and the link write run beside it
+    def bad = {
+      import spark.implicits._
+      val g = graph(Seq("p", "q"), Seq("p1" -> "p", "p2" -> "p", "q1" -> "q"),
+        Seq("p1" -> "q1", "p2" -> "q1"))
+      g.copy(nodes = g.nodes.union(
+        Seq(("q2", "q", """{"id":"q2","name":""")).toDF("id", "kind", "reported")))
+    }
+    val db = Files.createTempDirectory("graft-failing-derby").resolve("db")
+    val dests = destinations("failing").filter {
+      case ArrowDest(cfg) => cfg.format == "parquet"
+      case _ => true
+    } :+ DbDest(JdbcDestination(s"jdbc:derby:$db;create=true", "derby"))
+    dests.foreach { dest =>
+      run(good, dest)
+      val before = committed(dest, Set("p", "q", "link_p_q"))
+      val cached = spark.sparkContext.getPersistentRDDs.keySet
+      val e = intercept[Exception](run(bad, dest))
+      assert(e.getClass == classOf[org.apache.spark.SparkException], s"$dest: $e")
+      assert(committed(dest, Set("p", "q", "link_p_q")) == before, s"$dest: snapshot changed")
+      assert(staged(dest).isEmpty, s"$dest: staging left ${staged(dest).mkString(", ")}")
+      assert(spark.sparkContext.getPersistentRDDs.keySet.diff(cached).isEmpty,
+        s"$dest: the failed run left a cache")
+    }
+  }
+
+  test("a kind whose name is a path prefix of another's stages both, in either order") {
+    // kind `a/b` names a table directory inside kind `a`'s: the concurrent
+    // writes must not nest, and `a` must not replace `a/b` when it lands
+    val nodes = Seq("a1" -> "a", "a2" -> "a", "b1" -> "a/b")
+    Seq(Seq("a", "a/b"), Seq("a/b", "a")).foreach { kinds =>
+      destinations("nested").filter {
+        case ArrowDest(cfg) => cfg.format == "parquet"
+        case _ => true
+      }.foreach { dest =>
+        val report = run(graph(kinds, nodes, Nil), dest)
+        assert(report.totalNodes == 3, s"$dest, $kinds")
+        assert(committed(dest, Set("a", "a/b")).view.mapValues(_.size).toMap ==
+          Map("a" -> 2, "a/b" -> 1), s"$dest, $kinds")
+        noPrivateLinkDirs(dest)
+      }
+    }
   }
 
   test("a source without edges stages its kind tables and no link table") {

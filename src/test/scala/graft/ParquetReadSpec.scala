@@ -4,17 +4,17 @@ import java.nio.file.Files
 
 import graft.config.SqliteDestination
 import graft.query.Snapshot
-import graft.sink.SqliteSnapshotCommit
+import graft.sink.{SqliteDbReader, SqliteDdl, SqliteSnapshotCommit}
 import graft.sources.SqliteSource
-import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Tables.readParquet]] resolves a parquet path's schema from one footer
   * read in-process, without a Spark job. This spec pins that the result is
   * exactly Spark's own non-merging inference, that every path it does not
-  * handle keeps Spark's behaviour, and that the mount and the SQLite commit
-  * run no inference job.
+  * handle keeps Spark's behaviour, and that the mount runs no inference job
+  * and the SQLite commit no job at all.
   */
 class ParquetReadSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
@@ -106,7 +106,7 @@ class ParquetReadSpec extends AnyFunSuite {
     assert(spark.table("kind_3").count() == 5)
   }
 
-  test("SqliteSnapshotCommit runs one job per staged single-partition table") {
+  test("SqliteSnapshotCommit runs no Spark job") {
     val dir = tmp("graft-pq-sqlite")
     val cfg = SqliteDestination(s"$dir/snap.db")
     val tables = Seq("alpha", "beta", "gamma")
@@ -115,8 +115,54 @@ class ParquetReadSpec extends AnyFunSuite {
       spark.range(i + 2).select(col("id"), col("id").cast("string").as("name"))
         .coalesce(1).write.parquet(s"${commit.stagingDir}/$t")
     }
-    assert(jobsIn(commit.commit(spark)) == tables.size)
+    assert(jobsIn(commit.commit(spark)) == 0)
     assert(SqliteSource.register(spark, cfg.database).sorted == tables)
     assert(spark.table("gamma").count() == 4)
+  }
+
+  test("SqliteSnapshotCommit commits each staged row as toStorage of its collect()") {
+    val dir = tmp("graft-pq-sqlite-types")
+    val cfg = SqliteDestination(s"$dir/snap.db")
+    val commit = SqliteSnapshotCommit(cfg, "run1", Seq("typed", "empty"))
+    // one column per SqliteDdl.columnType class, NULL on every 5th row
+    def orNull(c: Column) = when(col("id") % 5 =!= 4, c)
+    val micros = col("id") * 86399000000L + when(col("id") % 2 === 1, lit(123456L)).otherwise(lit(0L))
+    val typed = spark.range(40).select(
+      orNull(col("id") % 2 === 0).as("flag"),
+      orNull(col("id").cast("byte")).as("tiny"),
+      orNull((col("id") * 7).cast("short")).as("small"),
+      orNull(col("id").cast("int") - 20).as("int"),
+      orNull(col("id") * 1000000007L).as("long"),
+      orNull(col("id").cast("float") / 3).as("float"),
+      orNull(col("id").cast("double") / 7).as("double"),
+      orNull((col("id") / 8).cast("decimal(12,3)")).as("dec"),
+      orNull(concat(lit("s-"), col("id").cast("string"), lit("-ü京"))).as("str"),
+      orNull(col("id").cast("string").cast("binary")).as("bin"),
+      // whole-second on even rows, fractional on odd ones
+      orNull(timestamp_micros(micros)).as("ts"),
+      orNull(timestamp_micros(micros).cast("timestamp_ntz")).as("ntz"),
+      orNull(date_add(lit("1999-12-30").cast("date"), col("id").cast("int"))).as("day"))
+    // several part files, and a table with no row
+    typed.repartition(3).write.parquet(s"${commit.stagingDir}/typed")
+    typed.filter(lit(false)).write.parquet(s"${commit.stagingDir}/empty")
+    assert(new java.io.File(s"${commit.stagingDir}/typed").list().count(_.endsWith(".parquet")) == 3)
+    // bytes compare by content
+    def multiset(rows: Iterator[Seq[Any]]) = rows
+      .map(_.map { case b: Array[Byte] => b.toSeq; case v => v })
+      .toSeq.groupBy(identity).map { case (r, n) => r -> n.size }
+    val want = Seq("typed", "empty").map { t =>
+      val df = spark.read.parquet(s"${commit.stagingDir}/$t")
+      t -> (df.columns.toSeq, multiset(df.collect().iterator.map(_.toSeq.map(SqliteDdl.toStorage))))
+    }.toMap
+    assert(want("typed")._2.values.sum == 40 && want("empty")._2.isEmpty)
+    commit.commit(spark)
+    val r = new SqliteDbReader(new java.io.File(cfg.database))
+    try {
+      r.verifyAll()
+      want.foreach { case (t, (columns, rows)) =>
+        assert(r.columns(t) == columns, t)
+        assert(multiset(r.rows(t)) == rows, t)
+      }
+    } finally r.close()
   }
 }

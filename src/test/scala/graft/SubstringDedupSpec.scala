@@ -11,13 +11,25 @@ import org.scalatest.funsuite.AnyFunSuite
 class SubstringDedupSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
 
-  private val rnd = new scala.util.Random(1031)
-  /** Random alphanumeric text — 36^n distinct n-grams, so accidental
-    * 16-char window collisions across a few-hundred-char corpus are
-    * impossible in practice.
+  /** Random text from one test's own generator, so no test's input
+    * depends on which tests ran before it. [[text]] (shared blocks, and
+    * text meant to share nothing) draws lowercase letters and digits — 36^n distinct n-grams, so accidental 16-char
+    * window collisions within a few hundred chars are impossible in
+    * practice. Doc `d`'s own text draws six uppercase letters that no
+    * other doc and no shared block uses, so no k-gram across a shared
+    * block's edge occurs in another doc, and each planted span is exactly
+    * its block.
     */
-  private def noise(n: Int): String =
-    Seq.fill(n)("abcdefghijklmnopqrstuvwxyz0123456789".charAt(rnd.nextInt(36))).mkString
+  private final class Text(seed: Long) {
+    private val rnd = new scala.util.Random(seed)
+    private def draw(n: Int, alphabet: String): String =
+      Seq.fill(n)(alphabet.charAt(rnd.nextInt(alphabet.length))).mkString
+    def text(n: Int): String = draw(n, "abcdefghijklmnopqrstuvwxyz0123456789")
+    def own(doc: Int, n: Int): String = {
+      require(doc >= 0 && doc < 4, s"doc $doc has no alphabet of its own")
+      draw(n, ('A' + 6 * doc until 'A' + 6 * doc + 6).map(_.toChar).mkString)
+    }
+  }
 
   private def spansOf(texts: Seq[String], k: Int, sample: Int = 1,
                       minDocs: Int = 2): Seq[(Long, Long, Long)] = {
@@ -30,10 +42,11 @@ class SubstringDedupSpec extends AnyFunSuite {
   }
 
   test("planted cross-doc duplicate is recovered as one maximal span in each doc") {
-    val shared = noise(80)
-    val a = noise(40) + shared + noise(30)
-    val b = noise(55) + shared + noise(10)
-    val spans = spansOf(Seq(a, b, noise(120)), k = 16)
+    val t = new Text(101)
+    val shared = t.text(80)
+    val a = t.own(0, 40) + shared + t.own(0, 30)
+    val b = t.own(1, 55) + shared + t.own(1, 10)
+    val spans = spansOf(Seq(a, b, t.own(2, 120)), k = 16)
     // maximal span = exactly the 80 shared chars, at each doc's offset
     assert(spans === Seq((0L, 41L, 120L), (1L, 56L, 135L)))
   }
@@ -46,19 +59,15 @@ class SubstringDedupSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    // LOCAL rng: the spec's shared `rnd` feeds later tests' expected
-    // literals — drawing from it here would shift their corpora
-    val lr = new scala.util.Random(7177)
-    def lnoise(n: Int): String =
-      Seq.fill(n)("abcdefghijklmnopqrstuvwxyz0123456789".charAt(lr.nextInt(36))).mkString
-    val shared = lnoise(60); val boiler = lnoise(25)
+    val lr = new Text(7177)
+    val shared = lr.text(60); val boiler = lr.text(25)
     val texts = Seq(
-      lnoise(30) + shared + lnoise(20),
-      shared + lnoise(44) + boiler,
-      boiler + lnoise(70) + boiler,            // intra-doc repeat
-      ("ab" * 30) + lnoise(40),                 // periodic, period < k
-      lnoise(15) + ("ab" * 30),
-      lnoise(150))
+      lr.text(30) + shared + lr.text(20),
+      shared + lr.text(44) + boiler,
+      boiler + lr.text(70) + boiler,            // intra-doc repeat
+      ("ab" * 30) + lr.text(40),                 // periodic, period < k
+      lr.text(15) + ("ab" * 30),
+      lr.text(150))
     // ids start NEGATIVE: selfDedupCut's r18 first-occurrence encoding
     // (doc_id·2⁴⁰ + pos as decimal) must stay order-exact and
     // pmod-decodable for negative doc_ids too — the shared span between
@@ -103,16 +112,14 @@ class SubstringDedupSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    val lr = new scala.util.Random(4211)
-    def lnoise(n: Int): String =
-      Seq.fill(n)("abcdefghijklmnopqrstuvwxyz0123456789".charAt(lr.nextInt(36))).mkString
-    val leak1 = lnoise(40); val leak2 = lnoise(25)
+    val lr = new Text(4211)
+    val leak1 = lr.text(40); val leak2 = lr.text(25)
     val corpus = Seq(
-      (1L, lnoise(30) + leak1 + lnoise(10)),
-      (2L, leak2 + lnoise(50)),
-      (3L, lnoise(80))).toDF("doc_id", "text")
+      (1L, lr.text(30) + leak1 + lr.text(10)),
+      (2L, leak2 + lr.text(50)),
+      (3L, lr.text(80))).toDF("doc_id", "text")
     val probe = Seq(
-      (100L, lnoise(5) + leak1),
+      (100L, lr.text(5) + leak1),
       (101L, leak2 + leak2)).toDF("doc_id", "text")
     val k = 16
     val byH = Window.partitionBy("h1", "h2")
@@ -159,13 +166,15 @@ class SubstringDedupSpec extends AnyFunSuite {
   }
 
   test("unique text produces no spans; docs shorter than k are ignored") {
-    assert(spansOf(Seq(noise(200), noise(200), "short"), k = 16).isEmpty)
+    val t = new Text(102)
+    assert(spansOf(Seq(t.text(200), t.text(200), "short"), k = 16).isEmpty)
   }
 
   test("two disjoint shared regions in one doc stay two spans (gap > k)") {
-    val s1 = noise(40); val s2 = noise(40)
-    val a = s1 + noise(50) + s2
-    val b = noise(20) + s1 + noise(33) + s2 + noise(9)
+    val t = new Text(103)
+    val s1 = t.text(40); val s2 = t.text(40)
+    val a = s1 + t.own(0, 50) + s2
+    val b = t.own(1, 20) + s1 + t.own(1, 33) + s2 + t.own(1, 9)
     val spans = spansOf(Seq(a, b), k = 16)
     assert(spans === Seq(
       (0L, 1L, 40L), (0L, 91L, 130L),
@@ -173,10 +182,11 @@ class SubstringDedupSpec extends AnyFunSuite {
   }
 
   test("abutting regions shared with DIFFERENT partners merge into one span") {
-    val x = noise(40); val y = noise(40)
+    val t = new Text(104)
+    val x = t.text(40); val y = t.text(40)
     val a = x + y              // x shared with doc1, y with doc2, adjacent
-    val b = noise(20) + x + noise(30)
-    val c = noise(33) + y + noise(9)
+    val b = t.own(1, 20) + x + t.own(1, 30)
+    val c = t.own(2, 33) + y + t.own(2, 9)
     val spans = spansOf(Seq(a, b, c), k = 16)
     // doc 0: x-windows end at pos 25, y-windows start at 41 — gap 16 ≤ k,
     // so the two regions coalesce into the single maximal duplicated range
@@ -187,12 +197,13 @@ class SubstringDedupSpec extends AnyFunSuite {
   }
 
   test("content-defined sampling detects copies at ANY relative alignment") {
-    val shared = noise(300)
+    val t = new Text(105)
+    val shared = t.text(300)
     // offsets 37 vs 0 differ by a non-multiple of sample=4: a positional
     // stride would never align the two copies' windows; content-defined
     // selection keeps the same windows in both docs by construction
-    val a = noise(37) + shared + noise(20)
-    val b = shared + noise(60)
+    val a = t.own(0, 37) + shared + t.own(0, 20)
+    val b = shared + t.own(1, 60)
     val spans = spansOf(Seq(a, b), k = 16, sample = 4)
     val d0 = spans.filter(_._1 == 0L); val d1 = spans.filter(_._1 == 1L)
     assert(d0.nonEmpty && d1.nonEmpty)
@@ -205,22 +216,24 @@ class SubstringDedupSpec extends AnyFunSuite {
   }
 
   test("minDocs=1 surfaces within-document repetition that minDocs=2 hides") {
-    val rep = noise(30)
-    val a = rep + noise(40) + rep
-    val only = Seq(a, noise(100))
+    val t = new Text(106)
+    val rep = t.text(30)
+    val a = rep + t.own(0, 40) + rep
+    val only = Seq(a, t.own(1, 100))
     assert(spansOf(only, k = 16, minDocs = 2).isEmpty)
     val within = spansOf(only, k = 16, minDocs = 1)
     assert(within === Seq((0L, 1L, 30L), (0L, 71L, 100L)))
   }
 
   test("minDocs=3 (dense_rank path): pairs are ignored, triples are reported") {
-    val pairOnly = noise(40)
-    val triple = noise(40)
+    val t = new Text(107)
+    val pairOnly = t.text(40)
+    val triple = t.text(40)
     val texts = Seq(
-      noise(10) + pairOnly + noise(5) + triple,
-      pairOnly + noise(20) + noise(35),
-      noise(25) + triple + noise(12),
-      triple + noise(55))
+      t.own(0, 10) + pairOnly + t.own(0, 5) + triple,
+      pairOnly + t.own(1, 20) + t.own(1, 35),
+      t.own(2, 25) + triple + t.own(2, 12),
+      triple + t.own(3, 55))
     val spans = spansOf(texts, k = 16, minDocs = 3)
     // the pair-shared region must NOT appear; the triple-shared one must,
     // in all three of its docs
@@ -230,13 +243,14 @@ class SubstringDedupSpec extends AnyFunSuite {
 
   test("cross-corpus spans: probe text located in corpus docs, probe side never reported") {
     import spark.implicits._
-    val evalQ = noise(60) // a "benchmark question" leaked into training text
+    val t = new Text(108)
+    val evalQ = t.text(60) // a "benchmark question" leaked into training text
     val corpus = Seq(
-      (10L, noise(30) + evalQ + noise(25)), // contaminated
-      (11L, noise(150)),                    // clean
-      (12L, evalQ)                          // the leak verbatim
+      (10L, t.own(0, 30) + evalQ + t.own(0, 25)), // contaminated
+      (11L, t.own(1, 150)),                       // clean
+      (12L, evalQ)                                // the leak verbatim
     ).toDF("doc_id", "text")
-    val probe = Seq((900L, noise(20) + evalQ + noise(5))).toDF("doc_id", "text")
+    val probe = Seq((900L, t.own(2, 20) + evalQ + t.own(2, 5))).toDF("doc_id", "text")
     val spans = graft.ext.SubstringDedup.crossCorpusSpans(corpus, probe, k = 16)
       .orderBy("doc_id", "span_start").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
@@ -245,10 +259,11 @@ class SubstringDedupSpec extends AnyFunSuite {
 
   test("cross-corpus spans: corpus-internal duplication alone is NOT flagged") {
     import spark.implicits._
-    val dup = noise(50)
-    val corpus = Seq((0L, dup + noise(20)), (1L, noise(10) + dup))
+    val t = new Text(109)
+    val dup = t.text(50)
+    val corpus = Seq((0L, dup + t.own(0, 20)), (1L, t.own(1, 10) + dup))
       .toDF("doc_id", "text") // duplicated between corpus docs only
-    val probe = Seq((9L, noise(100))).toDF("doc_id", "text")
+    val probe = Seq((9L, t.own(2, 100))).toDF("doc_id", "text")
     assert(graft.ext.SubstringDedup.crossCorpusSpans(corpus, probe, k = 16).count() === 0L)
   }
 
@@ -279,8 +294,9 @@ class SubstringDedupSpec extends AnyFunSuite {
 
   test("trim of crossCorpusSpans removes every leaked window end-to-end") {
     import spark.implicits._
-    val leak = noise(60)
-    val corpus = Seq((0L, noise(30) + leak + noise(20)), (1L, noise(90)))
+    val t = new Text(110)
+    val leak = t.text(60)
+    val corpus = Seq((0L, t.own(0, 30) + leak + t.own(0, 20)), (1L, t.own(1, 90)))
       .toDF("doc_id", "text")
     val probe = Seq((9L, leak)).toDF("doc_id", "text")
     val spans = graft.ext.SubstringDedup.crossCorpusSpans(corpus, probe, k = 16)
@@ -299,10 +315,11 @@ class SubstringDedupSpec extends AnyFunSuite {
     val k = 16; val w = 8
     // exactly the guarantee threshold: k + w - 1 = 23 shared chars,
     // at offsets differing by a non-multiple of anything
-    val shared = noise(23)
+    val t = new Text(111)
+    val shared = t.text(23)
     val docs = Seq(
-      (0L, noise(37) + shared + noise(21)),
-      (1L, noise(4) + shared + noise(50))
+      (0L, t.own(0, 37) + shared + t.own(0, 21)),
+      (1L, t.own(1, 4) + shared + t.own(1, 50))
     ).toDF("doc_id", "text")
     val spans = graft.ext.SubstringDedup.duplicatedSpansWinnowed(docs, k = k, w = w)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -315,10 +332,11 @@ class SubstringDedupSpec extends AnyFunSuite {
 
   test("winnowing detects periodic (self-similar) shared content despite hash ties") {
     import spark.implicits._
+    val t = new Text(112)
     val periodic = "ab" * 30 // every window hash equal -> worst tie case
     val docs = Seq(
-      (0L, noise(11) + periodic + noise(9)),
-      (1L, noise(26) + periodic + noise(3))
+      (0L, t.own(0, 11) + periodic + t.own(0, 9)),
+      (1L, t.own(1, 26) + periodic + t.own(1, 3))
     ).toDF("doc_id", "text")
     val spans = graft.ext.SubstringDedup.duplicatedSpansWinnowed(docs, k = 16, w = 8)
       .collect().map(r => r.getLong(0)).distinct.sorted
@@ -327,11 +345,12 @@ class SubstringDedupSpec extends AnyFunSuite {
 
   test("selfDedupCut keeps the first occurrence, cuts every later one, leaves no residual dups") {
     import spark.implicits._
-    val x = noise(60)
+    val t = new Text(113)
+    val x = t.text(60)
     val docs = Seq(
-      (0L, noise(20) + x + noise(10)), // first occurrence (least doc_id) — kept whole
-      (1L, noise(15) + x + noise(25)), // later cross-doc copy — cut
-      (2L, x + noise(5) + noise(40))   // another later copy — cut
+      (0L, t.own(0, 20) + x + t.own(0, 10)), // first occurrence (least doc_id) — kept whole
+      (1L, t.own(1, 15) + x + t.own(1, 25)), // later cross-doc copy — cut
+      (2L, x + t.own(2, 5) + t.own(2, 40))   // another later copy — cut
     ).toDF("doc_id", "text")
     val out = graft.ext.SubstringDedup.selfDedupCut(docs, k = 16)
       .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getString(1)))
@@ -359,12 +378,13 @@ class SubstringDedupSpec extends AnyFunSuite {
 
   test("mergeGap = 0 is honored as a minimal gap, not silently replaced by the default") {
     import spark.implicits._
-    val x = noise(20)
+    val t = new Text(114)
+    val x = t.text(20)
     // two copies of x in each of two docs, separated by > k noise: with
     // gap 0 the per-copy windows still merge only where starts are
     // adjacent... gap 0 means consecutive starts (diff <= 0) never merge,
     // so every flagged position becomes its own span
-    val docs = Seq((0L, x + noise(40) + x), (1L, x + noise(35) + x))
+    val docs = Seq((0L, x + t.own(0, 40) + x), (1L, x + t.own(1, 35) + x))
       .toDF("doc_id", "text")
     val dflt = graft.ext.SubstringDedup.duplicatedSpans(docs, k = 16)
     val zero = graft.ext.SubstringDedup.duplicatedSpans(docs, k = 16, mergeGap = 0)
@@ -378,8 +398,9 @@ class SubstringDedupSpec extends AnyFunSuite {
 
   test("selfDedupCut within one doc keeps the first copy only") {
     import spark.implicits._
-    val rep = noise(40)
-    val docs = Seq((5L, rep + noise(30) + rep)).toDF("doc_id", "text")
+    val t = new Text(115)
+    val rep = t.text(40)
+    val docs = Seq((5L, rep + t.own(0, 30) + rep)).toDF("doc_id", "text")
     val out = graft.ext.SubstringDedup.selfDedupCut(docs, k = 16).collect()
     val clean = out(0).getString(1)
     assert(clean.length === 70 && clean.startsWith(rep)) // kept first copy + middle
@@ -388,16 +409,16 @@ class SubstringDedupSpec extends AnyFunSuite {
 
   test("selfDedupCut's first-occurrence decode does not depend on allowPrecisionLoss") {
     import spark.implicits._
-    val x = noise(60)
+    val t = new Text(116)
+    val x = t.text(60)
     // doc_ids near both ends of the long range: doc_id·2⁴⁰ + pos needs 38
     // decimal digits, and the decode must stay exact whichever decimal
     // typing rule the session selects
     val ids = Seq(-4000000000000000003L, 4000000000000000001L, Long.MaxValue - 1)
     // around x, letters no other doc and x use: no k-gram across x's ends
     // is shared, so exactly x is cut from the later copies
-    def own(n: Int, from: Char) = Seq.fill(n)((from + rnd.nextInt(4)).toChar).mkString
     val docs = ids.zipWithIndex.map { case (id, i) =>
-      (id, own(20, ('A' + 8 * i).toChar) + x + own(10, ('E' + 8 * i).toChar))
+      (id, t.own(i, 20) + x + t.own(i, 10))
     }.toDF("doc_id", "text")
     val key = "spark.sql.decimalOperations.allowPrecisionLoss"
     val saved = spark.conf.getOption(key)
@@ -419,10 +440,11 @@ class SubstringDedupSpec extends AnyFunSuite {
 
   test("duplication profile: ppm fraction and zero rows for clean docs") {
     import spark.implicits._
-    val shared = noise(50)
-    val a = shared + noise(50) // 100 chars, 50 duplicated → 500000 ppm
-    val b = noise(25) + shared + noise(25)
-    val df = Seq((0L, a), (1L, b), (2L, noise(80)))
+    val t = new Text(117)
+    val shared = t.text(50)
+    val a = shared + t.own(0, 50) // 100 chars, 50 duplicated → 500000 ppm
+    val b = t.own(1, 25) + shared + t.own(1, 25)
+    val df = Seq((0L, a), (1L, b), (2L, t.own(2, 80)))
       .toDF("doc_id", "text")
     val prof = SubstringDedup.duplicationProfile(df, k = 16)
       .orderBy("doc_id").collect()

@@ -12,9 +12,12 @@ object BigSqliteCheck {
     val li = graft.Tables.lineitem(spark, "/root/testdata/sf0.01")
     val ev = graft.Tables.events(spark, "/root/testdata/sf0.01")
     val tables = Map("lineitem" -> li, "events" -> ev)
-    tables.foreach { case (name, df) => SnapshotSink.writeTable(name, df, SqliteDest(cfg), "bigrun") }
+    val commit = SqliteSnapshotCommit(cfg, "bigrun", tables.keys.toSeq)
+    tables.foreach { case (name, df) =>
+      SnapshotSink.writeTable(df, SqliteDest(cfg), s"${commit.stagingDir}/$name")
+    }
     println("staged: " + tables.keys.mkString(", "))
-    SqliteSnapshotCommit(cfg, "bigrun", tables.keys.toSeq).commit(spark)
+    commit.commit(spark)
     println("committed " + new java.io.File("/tmp/big.db").length() + " bytes")
     spark.stop()
   }
