@@ -13,6 +13,8 @@ the session falls on both sides alike. Then it prints, for every end-to-end
 metric declared in BENCHMARK.json: each side's median [Q1, Q3], the change
 of the median, the pairs the change won, and whether the gap of the medians
 is larger than the parent's interquartile range, in the better direction.
+Each run's progress line on stderr carries all of its end-to-end metrics,
+so a pair can be read as it lands.
 A run that fails or reports `correct: false` is named and its pair left
 out of the table; after the table the script lists every such run (seed and
 side) and exits 1.
@@ -89,7 +91,8 @@ def main():
             for name, tree in order:
                 m, err = run(tree, args.workload, seed, seconds)
                 print(f"[snap_ab] seed {seed} {name}: " +
-                      (err or f"snapshot_s {m.get('snapshot_s', float('nan')):.3f}"), file=sys.stderr)
+                      (err or " ".join(f"{k['name']} {m[k['name']]:.4g}" for k in metrics
+                                       if k["name"] in m)), file=sys.stderr)
                 if err:
                     failed.append(f"seed {seed} {name}: {err}")
                 pair[name] = m

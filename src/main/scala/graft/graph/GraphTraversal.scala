@@ -4,6 +4,7 @@ import graft.CacheTracker
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -25,6 +26,11 @@ import scala.collection.mutable
   *  - one shuffle of those ids by id, deduplicated map-side;
   *  - a partition-local anti-join against `visited`, the
   *    partitioner-aware union of the hop sets so far (no copy per hop).
+  *
+  * The adjacency is that partitioning's shuffle output, not a cache: the
+  * first job runs its map stage, and every later hop reads the same
+  * shuffle files (Spark skips the map stage), so the edges are never held
+  * as objects in the block store.
   *
   * That is one Spark job per hop: its `count` is the emptiness probe, and
   * an empty hop ends the walk. The last hop (`maxHops`) needs no probe and
@@ -51,7 +57,8 @@ object GraphTraversal {
     *         hop 0), as ONE materialized cache. Inside a
     *         [[CacheTracker.scope]] that cache belongs to the scope;
     *         outside one, `result.unpersist()` releases everything the call
-    *         pinned. The RDDs persisted per hop are released before return.
+    *         pinned. The RDDs persisted per hop are released before return;
+    *         the adjacency is never persisted.
     */
   def reachableWithin(edges: DataFrame, starts: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0)
@@ -60,9 +67,10 @@ object GraphTraversal {
     val pinned = mutable.ListBuffer.empty[RDD[_]]
     def pin[T](rdd: RDD[T]): RDD[T] = { pinned += rdd; rdd.persist(StorageLevel.MEMORY_AND_DISK) }
     try {
-      lazy val adjacency = pin(nonNull(edges, "from_id", "to_id")
-        .map(r => (r.getString(0), r.getString(1))).partitionBy(byId))
-      val start = pin(nonNull(starts, "id").map(r => (r.getString(0), 0)).reduceByKey(byId, (a, _) => a))
+      lazy val adjacency = nonNull(edges, "from_id", "to_id")
+        .map(r => (r.getUTF8String(0).toString, r.getUTF8String(1).toString)).partitionBy(byId)
+      val start = pin(nonNull(starts, "id").map(r => (r.getUTF8String(0).toString, 0))
+        .reduceByKey(byId, (a, _) => a))
       // sets(k): the ids first reached at hop k, disjoint, all keyed by byId
       val sets = mutable.ArrayBuffer[RDD[(String, Int)]](start)
       var reachedNothing = false
@@ -80,10 +88,12 @@ object GraphTraversal {
     } finally pinned.foreach(_.unpersist(blocking = false))
   }
 
-  /** The rows of `df`'s `cols`, as strings, where none of them is NULL. */
-  private def nonNull(df: DataFrame, cols: String*): RDD[Row] =
+  /** The rows of `df`'s `cols`, as strings, where none of them is NULL:
+    * the plan's internal rows, read before the next row replaces them.
+    */
+  private def nonNull(df: DataFrame, cols: String*): RDD[InternalRow] =
     df.filter(cols.map(col(_).isNotNull).reduce(_ && _))
-      .select(cols.map(c => col(c).cast("string")): _*).rdd
+      .select(cols.map(c => col(c).cast("string")): _*).queryExecution.toRdd
 
   /** Hop `hop`: the ids the `frontier` reaches over `adjacency` that are not
     * in `visited`, keyed by `byId`. All three inputs are keyed by `byId`.

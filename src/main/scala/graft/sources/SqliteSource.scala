@@ -1,8 +1,16 @@
 package graft.sources
 
 import graft.sink.{SqliteDbReader, SqliteFormat}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.graftbridge.RowsBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 import java.io.File
 import java.time.format.DateTimeFormatter
@@ -15,9 +23,14 @@ import java.time.{LocalDate, LocalDateTime, ZoneOffset}
   * and query on.
   *
   * A SQLite file is inherently a single-node artifact (one file, page
-  * chain), so ingest reads it once on the driver and parallelizes the rows
-  * into the cluster — the same boundary the reference crosses in the other
-  * direction when it INSERTs row batches. Declared column types come from
+  * chain), so ingest reads it once on the driver — the same boundary the
+  * reference crosses in the other direction when it INSERTs row batches —
+  * and decodes each record once, at mount, into Spark's binary row format
+  * (`UnsafeRow`). Each table is a `LogicalRDD` over those bytes, packed
+  * into one array per partition, with real statistics (row count, summed
+  * row bytes): a query reads the rows in place, with no per-row object and
+  * no conversion, and the planner broadcasts a small table in a join
+  * instead of shuffling both sides. Declared column types come from
   * the stored CREATE TABLE text; SQLite cells are dynamically typed, so
   * values are coerced to the declared affinity (DATETIME/DATE text parses
   * back to Spark timestamps/dates, INTEGER-affinity booleans to long, …)
@@ -89,20 +102,74 @@ object SqliteSource {
     }
   }
 
+  /** The table at `root` as a DataFrame: every record coerced and written
+    * as an `UnsafeRow` here, on the driver, with no Spark job and no
+    * generated class.
+    */
   private def toDf(spark: SparkSession, reader: SqliteDbReader,
                    root: Int, sql: String): DataFrame = {
-    val cols = SqliteFormat.columnsOf(sql)
-    val schema = StructType(cols.map { case (n, t) => StructField(n, sparkType(t)) })
+    val schema = StructType(SqliteFormat.columnsOf(sql).map { case (n, t) => StructField(n, sparkType(t)) })
+    val types = schema.fields.map(_.dataType)
+    val writer = new UnsafeRowWriter(types.length)
     val rows = reader.rowsAt(root).map { vs =>
+      writer.reset()
+      writer.zeroOutNullBytes()
       // SQLite legally stores SHORT records after ALTER TABLE ADD COLUMN
-      // (old rows keep their pre-ALTER width) — pad with NULLs so the Row
-      // matches the schema instead of aborting createDataFrame, honoring
-      // the degrade-to-NULL contract above
-      Row.fromSeq(vs.padTo(schema.fields.length, null)
-        .zip(schema.fields).map { case (v, f) => coerce(v, f.dataType) })
-    }.toSeq
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, math.max(1, rows.size / 10000)), schema)
+      // (old rows keep their pre-ALTER width): the missing cells are NULL,
+      // honoring the degrade-to-NULL contract above
+      types.indices.foreach(i => put(writer, i, coerce(if (i < vs.length) vs(i) else null, types(i))))
+      writer.getRow.copy()
+    }.toArray
+    val slices = math.max(1, rows.length / 10000)
+    val blobs = rows.grouped(math.max(1, (rows.length + slices - 1) / slices)).map(pack).toSeq
+    val fields = types.length
+    val rdd = spark.sparkContext.parallelize(blobs, math.max(1, blobs.size))
+      .mapPartitions(_.flatMap(unpack(_, fields)))
+    RowsBridge.frame(spark, schema, rdd,
+      Statistics(sizeInBytes = BigInt(rows.map(_.getSizeInBytes.toLong).sum), rowCount = Some(BigInt(rows.length))))
+  }
+
+  /** A [[coerce]]d value (its class follows the column type) in Spark's
+    * internal form, as `CatalystTypeConverters` would convert it.
+    */
+  private def put(writer: UnsafeRowWriter, i: Int, v: Any): Unit = v match {
+    case null                  => writer.setNullAt(i)
+    case l: Long               => writer.write(i, l)
+    case d: Double             => writer.write(i, d)
+    case s: String             => writer.write(i, UTF8String.fromString(s))
+    case b: Array[Byte]        => writer.write(i, b)
+    case t: java.sql.Timestamp => writer.write(i, DateTimeUtils.fromJavaTimestamp(t))
+    case d: java.sql.Date      => writer.write(i, DateTimeUtils.fromJavaDate(d))
+  }
+
+  /** `rows` as one array: each row's size as a long, then its bytes, so
+    * every row starts 8-byte aligned as an `UnsafeRow` must.
+    */
+  private def pack(rows: Array[UnsafeRow]): Array[Byte] = {
+    val blob = new Array[Byte](Math.toIntExact(rows.map(8L + _.getSizeInBytes).sum))
+    var at = Platform.BYTE_ARRAY_OFFSET.toLong
+    rows.foreach { r =>
+      Platform.putLong(blob, at, r.getSizeInBytes)
+      r.writeToMemory(blob, at + 8)
+      at += 8 + r.getSizeInBytes
+    }
+    blob
+  }
+
+  /** The rows of a [[pack]]ed array, read in place through one reused row
+    * (the scan projects each row before anything keeps it).
+    */
+  private def unpack(blob: Array[Byte], fields: Int): Iterator[InternalRow] = new Iterator[InternalRow] {
+    private val row = new UnsafeRow(fields)
+    private var at = Platform.BYTE_ARRAY_OFFSET.toLong
+    private val end = at + blob.length
+    def hasNext: Boolean = at < end
+    def next(): InternalRow = {
+      val size = Platform.getLong(blob, at).toInt
+      row.pointTo(blob, at + 8, size)
+      at += 8 + size
+      row
+    }
   }
 
   /** A table this reader cannot decode, with the reason: WITHOUT ROWID

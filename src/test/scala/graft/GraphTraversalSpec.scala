@@ -1,14 +1,19 @@
 package graft
 
 import graft.graph.GraphTraversal
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart, SparkListenerStageSubmitted, StageInfo}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.storage.{RDDBlockId, StorageLevel}
 import org.scalatest.funsuite.AnyFunSuite
+
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicLong
+import scala.jdk.CollectionConverters._
 
 /** The frontier BFS of `GraphTraversal.reachableWithin`: its rows against a
   * plain-Scala BFS on generated graphs, NULL ids, what it leaves cached,
-  * and its Spark job count.
+  * its Spark job count, and how often it shuffles its adjacency.
   */
 class GraphTraversalSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
@@ -129,5 +134,79 @@ class GraphTraversalSpec extends AnyFunSuite {
       val depths = (1 to 3).map(d => jobs(chain(d), 5, tables))
       assert(depths == Seq(3, 4, 5), s"$tables tables")
     }
+  }
+
+  /** Per job, its stages, in job order; the stages that ran, once per run;
+    * the RDDs that stored a block. A stage is named by the RDD it computes
+    * (the newest RDD of its pipeline): a later job that reads a shuffle
+    * lists its map stage under a new stage id, but with the same RDD.
+    */
+  private class StageRecorder extends SparkListener {
+    val jobs = new ConcurrentLinkedQueue[Set[Int]]()
+    val ran = new ConcurrentLinkedQueue[Int]()
+    val cached = ConcurrentHashMap.newKeySet[Int]()
+    private val events = new AtomicLong(0)
+    private def rddOf(stage: StageInfo): Int = stage.rddInfos.map(_.id).max
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      jobs.add(e.stageInfos.map(rddOf).toSet); events.incrementAndGet()
+    }
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+      ran.add(rddOf(e.stageInfo)); events.incrementAndGet()
+    }
+    override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = {
+      e.blockUpdatedInfo.blockId match {
+        case RDDBlockId(rdd, _) if e.blockUpdatedInfo.storageLevel.isValid => cached.add(rdd)
+        case _ =>
+      }
+      events.incrementAndGet()
+    }
+
+    /** Waits until the listener bus has delivered the call's events: no new
+      * event for 300 ms.
+      */
+    def settle(): Unit = {
+      var cur = -1L
+      while (cur != events.get) { cur = events.get; Thread.sleep(300) }
+    }
+  }
+
+  test("the adjacency is shuffled once per call, read by every hop, and never cached") {
+    val sc = spark.sparkContext
+    val chain = (0 until 6).map(i => s"n$i" -> s"n${i + 1}")
+    val before = sc.getPersistentRDDs.keySet
+    def traced(body: => DataFrame): (DataFrame, StageRecorder) = {
+      val seen = new StageRecorder
+      sc.addSparkListener(seen)
+      try (body, seen) finally { seen.settle(); sc.removeSparkListener(seen) }
+    }
+
+    val (out, seen) = traced(GraphTraversal.reachableWithin(edgesOf(chain, 2), startsOf(Seq("n0")), 3))
+    try {
+      assert(hopsOf(out) == Map("n0" -> 0, "n1" -> 1, "n2" -> 2, "n3" -> 3))
+      val jobs = seen.jobs.asScala.toSeq
+      assert(jobs.size == 3, "two probed hops, then the result")
+      // the stages every job shares: the map stages of the adjacency's, the
+      // start set's and the first hop's shuffles. The first job runs them;
+      // the later hops skip them.
+      val everyHop = jobs.reduce(_ intersect _)
+      assert(everyHop.size == 3, jobs)
+      val ran = seen.ran.asScala.toSeq
+      assert(ran.distinct == ran, s"a stage ran twice: $ran")
+      assert(everyHop.subsetOf(ran.toSet))
+      // what stored blocks: the start set, the two probed hop sets and the
+      // result's cache, and no adjacency
+      assert(seen.cached.size == 4, seen.cached)
+    } finally out.unpersist()
+    assert(sc.getPersistentRDDs.keySet == before)
+
+    CacheTracker.scope {
+      val (in, seen) = traced(GraphTraversal.reachableWithin(edgesOf(chain, 1), startsOf(Seq("n0")), 2))
+      assert(hopsOf(in) == Map("n0" -> 0, "n1" -> 1, "n2" -> 2))
+      val ran = seen.ran.asScala.toSeq
+      assert(ran.distinct == ran, s"a stage ran twice: $ran")
+      assert(seen.cached.size == 3, seen.cached)
+    }
+    assert(sc.getPersistentRDDs.keySet == before)
   }
 }
