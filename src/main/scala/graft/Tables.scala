@@ -68,21 +68,6 @@ object Tables {
     }
   }
 
-  /** The data files of the parquet file or directory `path`, in path order,
-    * and their schema from one footer read in the calling process, picked
-    * and converted as [[readParquet]] does. Subdirectories are not part of
-    * it: this is a staged table, and a staged table's directory holds
-    * another table's only when one kind name is a path prefix of another.
-    * None when no file holds a footer; a missing path or a footer that
-    * does not parse throws.
-    */
-  private[graft] def parquetFiles(spark: SparkSession,
-                                  path: String): Option[(StructType, Seq[FileStatus])] = {
-    val (hadoopConf, listed) = listing(spark, path)
-    val files = listed.filterNot(_.isDirectory)
-    footerSchema(spark, hadoopConf, files).map(_ -> files.filter(dataFile))
-  }
-
   private val SummaryFiles = Set("_common_metadata", "_metadata")
 
   // Spark's listing filter (HadoopFSUtils.shouldFilterOutPathName)
@@ -90,12 +75,6 @@ object Tables {
     val exclude = (name.startsWith("_") && !name.contains("=")) ||
       name.startsWith(".") || name.endsWith("._COPYING_")
     !exclude || name.startsWith("_common_metadata") || name.startsWith("_metadata")
-  }
-
-  // the files of a listing a scan reads (PartitioningAwareFileIndex)
-  private def dataFile(f: FileStatus): Boolean = {
-    val name = f.getPath.getName
-    !((name.startsWith("_") && !name.contains("=")) || name.startsWith(".")) && f.getLen > 0
   }
 
   /** `path` as Spark's listing sees it, in path order: the entries of a

@@ -86,8 +86,8 @@ object Vacuum {
   }
 
   /** GC for the native SQLite destination's work areas: a run that dies
-    * before its commit strands `<database>.staging/<runId>` (parquet
-    * stage) and possibly `<database>.tmp-<runId>` (partial db file);
+    * before its commit strands `<database>.staging/<runId>` (staged
+    * record files) and possibly `<database>.tmp-<runId>` (partial db file);
     * successful commits remove only their OWN runId, so siblings from
     * crashed runs accumulate. Same age discipline as [[vacuum]]; the
     * database file itself is never touched.

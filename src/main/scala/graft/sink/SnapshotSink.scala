@@ -22,8 +22,10 @@ import java.util.concurrent.{ExecutionException, LinkedBlockingQueue, ThreadPool
   *  - File targets: write `<base>/_staging/<runId>/<table>` then swap the
   *    `<base>/current` directory by rename (atomic on HDFS-like FS; on
   *    object stores use a pointer-file commit — same protocol).
-  *  - SQLite: stage parquet under `<database>.staging/<runId>/<table>`;
-  *    the commit builds one database file and renames it into place.
+  *  - SQLite: stage each table's rows as SQLite records, encoded on the
+  *    executors, under `<database>.staging/<runId>/<table>`
+  *    ([[SqliteRecordFormat]]); the commit packs them into one database
+  *    file and renames it into place.
   *  - JDBC targets: write `<table>__tmp` then one transaction of
   *    RENAME DDL per table (dialect-specific), mirroring [D]
   *    `SqlUpdater.swap_temp_tables`.
@@ -77,10 +79,12 @@ object SnapshotSink {
       // reference CSV carries a header [T :52]
       if (cfg.format == "csv") FileStaging(s"${cfg.path}/_staging", "csv", opts + ("header" -> "true"))
       else FileStaging(s"${cfg.path}/_staging", "parquet", opts)
-    // parquet with the SQL-flattened schema: staging keeps full write
-    // parallelism; the single-file build happens once at commit
-    // (SqliteSnapshotCommit), after the global barrier
-    case SqliteDest(cfg) => FileStaging(s"${cfg.database}.staging", "parquet", Map.empty)
+    // SQLite records of the SQL-flattened schema, encoded by the write
+    // tasks: staging keeps full write parallelism, and the single-file
+    // build at commit (SqliteSnapshotCommit), after the global barrier,
+    // only packs them into pages
+    case SqliteDest(cfg) =>
+      FileStaging(s"${cfg.database}.staging", classOf[SqliteRecordFormat].getName, Map.empty)
     case other => throw new IllegalArgumentException(s"$other stages no files")
   }
 

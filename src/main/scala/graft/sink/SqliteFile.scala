@@ -8,7 +8,9 @@ import scala.collection.mutable.ArrayBuffer
   * `__main__.py:60` emits `destinations: sqlite:`) without any JDBC driver:
   * the sandbox ships none, but the format itself is public and fully
   * documented (sqlite.org/fileformat2.html), so the sink writes the file
-  * directly from the staged snapshot.
+  * directly. Staging encodes each row as its record on the executors
+  * ([[RecordBuilder]], through [[SqliteRecordFormat]]); the commit appends
+  * the staged records to pages ([[SqliteDbWriter.TableWriter.addPayload]]).
   *
   * Scope: exactly what the reference's ETL produces — rowid tables created
   * once and bulk-loaded in rowid order. No indexes, no freelist, no WAL,
@@ -45,21 +47,28 @@ object SqliteFormat {
   }
 
   def putVarint(v: Long): Array[Byte] = {
-    if (v >= 0 && v <= 0x7f) Array(v.toByte)
+    val out = new Array[Byte](varintLen(v))
+    writeVarint(out, 0, v)
+    out
+  }
+
+  /** Writes `v`'s varint into `b` at `off`; returns the offset after it. */
+  def writeVarint(b: Array[Byte], off: Int, v: Long): Int =
+    if (v >= 0 && v <= 0x7f) { b(off) = v.toByte; off + 1 }
     else if (v < 0 || (v >>> 56) != 0) {
-      val out = new Array[Byte](9)
-      out(8) = (v & 0xff).toByte
+      b(off + 8) = (v & 0xff).toByte
       var x = v >>> 8
       var i = 7
-      while (i >= 0) { out(i) = ((x & 0x7f) | 0x80).toByte; x >>>= 7; i -= 1 }
-      out
+      while (i >= 0) { b(off + i) = ((x & 0x7f) | 0x80).toByte; x >>>= 7; i -= 1 }
+      off + 9
     } else {
-      var acc: List[Byte] = List((v & 0x7f).toByte)
+      val n = varintLen(v)
+      b(off + n - 1) = (v & 0x7f).toByte
       var x = v >>> 7
-      while (x != 0) { acc = ((x & 0x7f) | 0x80).toByte :: acc; x >>>= 7 }
-      acc.toArray
+      var i = n - 2
+      while (i >= 0) { b(off + i) = ((x & 0x7f) | 0x80).toByte; x >>>= 7; i -= 1 }
+      off + n
     }
-  }
 
   /** Returns (value, bytesConsumed) reading at `off`. */
   def getVarint(b: Array[Byte], off: Int): (Long, Int) = {
@@ -75,14 +84,38 @@ object SqliteFormat {
 
   // ---- record (row) encoding: serial-type header + value bodies ----
 
-  /** Serial type + body for one value. Accepted: null, Long, Double,
-    * String, Array[Byte] — the sink normalizes everything else first.
+  /** Builds one record at a time in buffers reused from record to record:
+    * each value's serial type and body as it is put, then the header and
+    * the bodies laid out by [[finish]]. Once the buffers have grown to the
+    * widest record, building one allocates nothing.
     */
-  private def serialOf(v: Any): (Long, Array[Byte]) = v match {
-    case null => (0L, Array.emptyByteArray)
-    case l: Long =>
-      if (l == 0L) (8L, Array.emptyByteArray)       // schema format 4
-      else if (l == 1L) (9L, Array.emptyByteArray)
+  final class RecordBuilder {
+    private var serials = new Array[Long](16)
+    private var columns = 0
+    private var body = new Array[Byte](256)
+    private var bodyLen = 0
+    private var out = new Array[Byte](256)
+
+    /** Starts the next record. */
+    def clear(): Unit = { columns = 0; bodyLen = 0 }
+
+    private def serial(st: Long): Unit = {
+      if (columns == serials.length) serials = java.util.Arrays.copyOf(serials, 2 * columns)
+      serials(columns) = st; columns += 1
+    }
+
+    /** Reserves `n` body bytes; returns their offset in [[bodyBytes]]. */
+    private def grow(n: Int): Int = {
+      if (bodyLen + n > body.length)
+        body = java.util.Arrays.copyOf(body, math.max(2 * body.length, bodyLen + n))
+      val at = bodyLen; bodyLen += n; at
+    }
+
+    def putNull(): Unit = serial(0L)
+
+    def putLong(l: Long): Unit =
+      if (l == 0L) serial(8L)       // schema format 4
+      else if (l == 1L) serial(9L)
       else {
         val n =
           if (l >= -128 && l <= 127) 1
@@ -91,38 +124,76 @@ object SqliteFormat {
           else if (l >= Int.MinValue && l <= Int.MaxValue) 4
           else if (l >= -140737488355328L && l <= 140737488355327L) 6
           else 8
-        val st = n match { case 1 => 1L; case 2 => 2L; case 3 => 3L; case 4 => 4L; case 6 => 5L; case _ => 6L }
-        val out = new Array[Byte](n)
-        var i = n - 1; var x = l
-        while (i >= 0) { out(i) = (x & 0xff).toByte; x >>= 8; i -= 1 }
-        (st, out)
+        serial(n match { case 6 => 5L; case 8 => 6L; case _ => n.toLong })
+        putBe(l, n)
       }
-    case d: Double =>
-      val bits = java.lang.Double.doubleToLongBits(d)
-      val out = new Array[Byte](8)
-      var i = 7; var x = bits
-      while (i >= 0) { out(i) = (x & 0xff).toByte; x >>= 8; i -= 1 }
-      (7L, out)
-    case s: String =>
+
+    def putDouble(d: Double): Unit = { serial(7L); putBe(java.lang.Double.doubleToLongBits(d), 8) }
+
+    private def putBe(v: Long, n: Int): Unit = {
+      val at = grow(n)
+      var i = n - 1; var x = v
+      while (i >= 0) { body(at + i) = (x & 0xff).toByte; x >>= 8; i -= 1 }
+    }
+
+    def putText(s: String): Unit = {
       val b = s.getBytes("UTF-8")
-      (13L + 2L * b.length, b)
-    case b: Array[Byte] =>
-      (12L + 2L * b.length, b)
-    case other =>
-      throw new IllegalArgumentException(s"unsupported sqlite value: ${other.getClass}")
+      val at = text(b.length)
+      System.arraycopy(b, 0, body, at, b.length)
+    }
+
+    /** Puts a TEXT value of `len` UTF-8 bytes, which the caller writes
+      * into [[bodyBytes]] at the returned offset.
+      */
+    def text(len: Int): Int = { serial(13L + 2L * len); grow(len) }
+
+    def putBlob(b: Array[Byte]): Unit = {
+      serial(12L + 2L * b.length)
+      val at = grow(b.length)
+      System.arraycopy(b, 0, body, at, b.length)
+    }
+
+    /** Accepted: null, Long, Double, String, Array[Byte]. */
+    def put(v: Any): Unit = v match {
+      case null           => putNull()
+      case l: Long        => putLong(l)
+      case d: Double      => putDouble(d)
+      case s: String      => putText(s)
+      case b: Array[Byte] => putBlob(b)
+      case other =>
+        throw new IllegalArgumentException(s"unsupported sqlite value: ${other.getClass}")
+    }
+
+    def bodyBytes: Array[Byte] = body
+
+    /** Lays out the record put since [[clear]] and returns its length: the
+      * record is `bytes(0 until length)`.
+      */
+    def finish(): Int = {
+      var stLen = 0
+      var i = 0
+      while (i < columns) { stLen += varintLen(serials(i)); i += 1 }
+      // header length includes its own varint — fixed point in 1-2 rounds
+      var hlen = stLen + 1
+      while (varintLen(hlen) != hlen - stLen) hlen = stLen + varintLen(hlen)
+      val total = hlen + bodyLen
+      if (total > out.length) out = new Array[Byte](math.max(2 * out.length, total))
+      var o = writeVarint(out, 0, hlen)
+      i = 0
+      while (i < columns) { o = writeVarint(out, o, serials(i)); i += 1 }
+      System.arraycopy(body, 0, out, o, bodyLen)
+      total
+    }
+
+    def bytes: Array[Byte] = out
   }
 
+  /** One record of `values` (see [[RecordBuilder.put]]). */
   def encodeRecord(values: Seq[Any]): Array[Byte] = {
-    val parts = values.map(serialOf)
-    val stBytes = parts.flatMap(p => putVarint(p._1)).toArray
-    // header length includes its own varint — fixed point in 1-2 rounds
-    var hlen = stBytes.length + 1
-    while (varintLen(hlen) != hlen - stBytes.length) hlen = stBytes.length + varintLen(hlen)
-    val out = new ArrayBuffer[Byte](hlen + parts.map(_._2.length).sum)
-    out ++= putVarint(hlen)
-    out ++= stBytes
-    parts.foreach(out ++= _._2)
-    out.toArray
+    val b = new RecordBuilder
+    values.foreach(b.put)
+    val n = b.finish()
+    java.util.Arrays.copyOf(b.bytes, n)
   }
 
   /** Decodes one record; ints → Long, floats → Double, text → String,
@@ -240,9 +311,13 @@ object SqliteFormat {
     }
   }
 
-  def be16(v: Int): Array[Byte] = Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-  def be32(v: Int): Array[Byte] =
-    Array((v >>> 24).toByte, ((v >> 16) & 0xff).toByte, ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
+  def putBe16(b: Array[Byte], off: Int, v: Int): Unit = {
+    b(off) = ((v >> 8) & 0xff).toByte; b(off + 1) = (v & 0xff).toByte
+  }
+  def putBe32(b: Array[Byte], off: Int, v: Int): Unit = {
+    b(off) = (v >>> 24).toByte; b(off + 1) = ((v >> 16) & 0xff).toByte
+    b(off + 2) = ((v >> 8) & 0xff).toByte; b(off + 3) = (v & 0xff).toByte
+  }
   def readBe16(b: Array[Byte], off: Int): Int = ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
   def readBe32(b: Array[Byte], off: Int): Int =
     ((b(off) & 0xff) << 24) | ((b(off + 1) & 0xff) << 16) | ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
@@ -291,43 +366,28 @@ final class SqliteDbWriter(file: File) {
     */
   def abort(): Unit = try raf.close() catch { case _: Exception => () }
 
-  /** Builds one leaf page image. `reserve` > 0 only for the page-1 root
-    * (the 100-byte file header precedes the b-tree header).
-    */
-  private[sink] def buildLeaf(cells: Seq[Array[Byte]], reserve: Int): Array[Byte] = {
-    val page = new Array[Byte](PageSize)
-    val base = reserve
-    page(base) = 0x0d
-    System.arraycopy(be16(cells.size), 0, page, base + 3, 2)
-    var content = PageSize
-    var ptr = base + 8
-    cells.foreach { c =>
-      content -= c.length
-      System.arraycopy(c, 0, page, content, c.length)
-      System.arraycopy(be16(content), 0, page, ptr, 2)
-      ptr += 2
-    }
-    System.arraycopy(be16(content & 0xffff), 0, page, base + 5, 2)
-    page
-  }
-
   /** Builds one interior page image from an ordered child list. */
   private[sink] def buildInterior(children: Seq[(Int, Long)], reserve: Int): Array[Byte] = {
     val page = new Array[Byte](PageSize)
     val base = reserve
     page(base) = 0x05
-    val cells = children.init.map { case (child, maxRowid) => be32(child) ++ putVarint(maxRowid) }
-    System.arraycopy(be16(cells.size), 0, page, base + 3, 2)
-    System.arraycopy(be32(children.last._1), 0, page, base + 8, 4)
+    val cells = children.init.map { case (child, maxRowid) =>
+      val c = new Array[Byte](4 + varintLen(maxRowid))
+      putBe32(c, 0, child)
+      writeVarint(c, 4, maxRowid)
+      c
+    }
+    putBe16(page, base + 3, cells.size)
+    putBe32(page, base + 8, children.last._1)
     var content = PageSize
     var ptr = base + 12
     cells.foreach { c =>
       content -= c.length
       System.arraycopy(c, 0, page, content, c.length)
-      System.arraycopy(be16(content), 0, page, ptr, 2)
+      putBe16(page, ptr, content)
       ptr += 2
     }
-    System.arraycopy(be16(content & 0xffff), 0, page, base + 5, 2)
+    putBe16(page, base + 5, content & 0xffff)
     page
   }
 
@@ -391,16 +451,16 @@ final class SqliteDbWriter(file: File) {
   private def writeHeader(): Unit = {
     val h = new Array[Byte](100)
     System.arraycopy("SQLite format 3\u0000".getBytes("ISO-8859-1"), 0, h, 0, 16)
-    System.arraycopy(be16(PageSize), 0, h, 16, 2)
+    putBe16(h, 16, PageSize)
     h(18) = 1; h(19) = 1          // legacy (rollback-journal) read/write
     h(21) = 64; h(22) = 32; h(23) = 32
-    System.arraycopy(be32(1), 0, h, 24, 4)            // change counter
-    System.arraycopy(be32(nextPage - 1), 0, h, 28, 4) // db size in pages
-    System.arraycopy(be32(1), 0, h, 40, 4)            // schema cookie
-    System.arraycopy(be32(4), 0, h, 44, 4)            // schema format 4
-    System.arraycopy(be32(1), 0, h, 56, 4)            // UTF-8
-    System.arraycopy(be32(1), 0, h, 92, 4)            // version-valid-for
-    System.arraycopy(be32(3039000), 0, h, 96, 4)      // written-by version
+    putBe32(h, 24, 1)            // change counter
+    putBe32(h, 28, nextPage - 1) // db size in pages
+    putBe32(h, 40, 1)            // schema cookie
+    putBe32(h, 44, 4)            // schema format 4
+    putBe32(h, 56, 1)            // UTF-8
+    putBe32(h, 92, 1)            // version-valid-for
+    putBe32(h, 96, 3039000)      // written-by version
     raf.seek(0)
     raf.write(h)
     // a db of N pages must be exactly N pages long even if the tail page's
@@ -408,60 +468,96 @@ final class SqliteDbWriter(file: File) {
     raf.setLength((nextPage - 1).toLong * PageSize)
   }
 
-  /** One table's streaming b-tree builder. */
+  /** One table's streaming b-tree builder. Each cell is written straight
+    * into the open leaf page, packed down from the page's end; the leaf is
+    * written out when the next cell does not fit.
+    */
   final class TableWriter private[sink] (db: SqliteDbWriter, name: String, ddl: String,
                                          rootReserve: Int = 0, rootAt: Option[Int] = None) {
     import SqliteFormat._
     private val leafCapacity = Usable - 8 - rootReserve
     private val leaves = ArrayBuffer.empty[(Int, Long)]
-    private val cells = ArrayBuffer.empty[Array[Byte]]
+    private val leaf = new Array[Byte](PageSize)
+    // a cell takes at least 5 bytes with its pointer, so at most 4088 / 5
+    private val cellAt = new Array[Int](PageSize / 4)
+    private var cells = 0
+    private var content = PageSize // start of the lowest cell in `leaf`
     private var used = 0
+    private val overflow = new Array[Byte](PageSize)
     private var rowid = 0L
     private var leafMaxRowid = 0L // rowid of the last cell CURRENTLY buffered
     private var done = false
 
     def addRow(values: Seq[Any]): Unit = {
-      require(!done, s"table $name already finished")
-      rowid += 1
       val payload = encodeRecord(values)
-      val cell = makeCell(payload, rowid)
-      val cost = cell.length + 2
-      // flush BEFORE appending: the new row belongs to the next leaf, so
-      // the flushed leaf's separator key is the previous row's id
-      if (cells.nonEmpty && used + cost > leafCapacity) flushLeaf()
-      cells += cell; used += cost; leafMaxRowid = rowid
+      addPayload(payload, payload.length)
     }
 
-    private def makeCell(payload: Array[Byte], rid: Long): Array[Byte] = {
-      val p = payload.length
-      if (p <= MaxLeafLocal)
-        putVarint(p) ++ putVarint(rid) ++ payload
-      else {
-        val k = MinLeafLocal + (p - MinLeafLocal) % (Usable - 4)
-        val local = if (k <= MaxLeafLocal) k else MinLeafLocal
-        // overflow chain: each page = be32(next) + up to U-4 payload bytes
-        var off = p
-        var next = 0
-        val chunk = Usable - 4
-        while (off > local) {
-          val start = math.max(local, off - ((off - local - 1) % chunk + 1))
-          val page = new Array[Byte](PageSize)
-          System.arraycopy(be32(next), 0, page, 0, 4)
-          System.arraycopy(payload, start, page, 4, off - start)
-          val no = db.allocate()
-          db.writePage(no, page)
-          next = no
-          off = start
+    /** Appends the record `payload(0 until length)` as the next rowid. */
+    def addPayload(payload: Array[Byte], length: Int): Unit = {
+      require(!done, s"table $name already finished")
+      rowid += 1
+      val local =
+        if (length <= MaxLeafLocal) length
+        else {
+          val k = MinLeafLocal + (length - MinLeafLocal) % (Usable - 4)
+          if (k <= MaxLeafLocal) k else MinLeafLocal
         }
-        putVarint(p) ++ putVarint(rid) ++ payload.take(local) ++ be32(next)
+      val spills = local < length
+      // the overflow chain's pages come before the leaf that holds the cell
+      val next = if (spills) writeOverflow(payload, length, local) else 0
+      val cellLen = varintLen(length) + varintLen(rowid) + local + (if (spills) 4 else 0)
+      val cost = cellLen + 2
+      // flush BEFORE appending: the new row belongs to the next leaf, so
+      // the flushed leaf's separator key is the previous row's id
+      if (cells > 0 && used + cost > leafCapacity) flushLeaf()
+      content -= cellLen
+      val o = writeVarint(leaf, writeVarint(leaf, content, length), rowid)
+      System.arraycopy(payload, 0, leaf, o, local)
+      if (spills) putBe32(leaf, o + local, next)
+      cellAt(cells) = content; cells += 1
+      used += cost; leafMaxRowid = rowid
+    }
+
+    /** Writes `payload(local until length)` as an overflow chain, each page
+      * be32(next) + up to U-4 payload bytes, last chunk first; returns the
+      * chain's first page.
+      */
+    private def writeOverflow(payload: Array[Byte], length: Int, local: Int): Int = {
+      var off = length
+      var next = 0
+      val chunk = Usable - 4
+      while (off > local) {
+        val start = math.max(local, off - ((off - local - 1) % chunk + 1))
+        putBe32(overflow, 0, next)
+        System.arraycopy(payload, start, overflow, 4, off - start)
+        java.util.Arrays.fill(overflow, 4 + off - start, PageSize, 0.toByte)
+        val no = db.allocate()
+        db.writePage(no, overflow)
+        next = no
+        off = start
       }
+      next
+    }
+
+    /** The open leaf as a page image with its b-tree header at `reserve`
+      * (100 only for the page-1 root, after the file header).
+      */
+    private def leafPage(reserve: Int): Array[Byte] = {
+      leaf(reserve) = 0x0d
+      putBe16(leaf, reserve + 3, cells)
+      putBe16(leaf, reserve + 5, content & 0xffff)
+      var i = 0
+      while (i < cells) { putBe16(leaf, reserve + 8 + 2 * i, cellAt(i)); i += 1 }
+      leaf
     }
 
     private def flushLeaf(): Unit = {
       val pageNo = db.allocate()
-      db.writePage(pageNo, db.buildLeaf(cells.toSeq, 0))
+      db.writePage(pageNo, leafPage(0))
       leaves += ((pageNo, leafMaxRowid))
-      cells.clear(); used = 0
+      java.util.Arrays.fill(leaf, 0.toByte)
+      cells = 0; content = PageSize; used = 0
     }
 
     /** Completes the b-tree; returns the root page number. */
@@ -470,14 +566,14 @@ final class SqliteDbWriter(file: File) {
       if (leaves.isEmpty && used <= leafCapacity) {
         // everything (possibly nothing) fits one leaf — it IS the root
         val pageNo = rootAt.getOrElse(db.allocate())
-        db.writePage(pageNo, db.buildLeaf(cells.toSeq, if (pageNo == 1) 100 else 0))
+        db.writePage(pageNo, leafPage(if (pageNo == 1) 100 else 0))
         pageNo
       } else {
         // `used > leafCapacity` happens only for a single cell that is too
         // big for a reserved (page-1) root leaf — it always fits a plain
         // leaf (max inline cell 4074 < 4088), which then hangs off an
         // interior root on page 1.
-        if (cells.nonEmpty) flushLeaf()
+        if (cells > 0) flushLeaf()
         db.buildTreeAbove(leaves.toSeq, rootReserve, rootAt)
       }
     }

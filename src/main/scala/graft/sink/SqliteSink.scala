@@ -1,18 +1,18 @@
 package graft.sink
 
 import graft.config.SqliteDestination
-import org.apache.spark.paths.SparkPath
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.time.format.DateTimeFormatter
-import java.time.ZoneOffset
+import java.time.{LocalDate, ZoneOffset}
 
 /** Spark → SQLite value/DDL mapping for the native file sink.
   *
@@ -20,10 +20,10 @@ import java.time.ZoneOffset
   * default destination `__main__.py:60`); we write the file directly (see
   * [[SqliteFormat]]), so this object owns the equivalent of SQLAlchemy's
   * type compilation: Spark scalar types → SQLite column affinities, and
-  * JVM row values → the writer's (null | Long | Double | String | bytes)
-  * storage classes. Nested columns were already JSON-encoded by
-  * `SnapshotSink.flattenForSql`, matching the reference's JSON-column
-  * degradation (SURVEY §1.2).
+  * Spark's internal row values → SQLite records of the (NULL | INTEGER |
+  * REAL | TEXT | BLOB) storage classes ([[RecordEncoder]]). Nested columns
+  * were already JSON-encoded by `SnapshotSink.flattenForSql`, matching the
+  * reference's JSON-column degradation (SURVEY §1.2).
   */
 object SqliteDdl {
 
@@ -56,47 +56,87 @@ object SqliteDdl {
   private val tsWhole  = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss").withZone(ZoneOffset.UTC)
   private val tsMicros = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS").withZone(ZoneOffset.UTC)
 
-  private def fmtInstant(i: java.time.Instant): String =
+  /** A DATETIME's text from Spark's internal microseconds (UTC for a
+    * TIMESTAMP, wall-clock for a TIMESTAMP_NTZ) in the proleptic Gregorian
+    * calendar, as `CAST AS STRING` and Python's `isoformat` read it.
+    */
+  private def datetime(micros: Long): String = {
+    val i = DateTimeUtils.microsToInstant(micros)
     if (i.getNano == 0) tsWhole.format(i) else tsMicros.format(i)
+  }
 
-  /** Normalizes a Spark Row value to the writer's storage classes. */
-  def toStorage(v: Any): Any = v match {
-    case null                       => null
-    case b: java.lang.Boolean       => if (b) 1L else 0L
-    case b: java.lang.Byte          => b.longValue
-    case s: java.lang.Short         => s.longValue
-    case i: java.lang.Integer       => i.longValue
-    case l: java.lang.Long          => l
-    case f: java.lang.Float         => f.doubleValue
-    case d: java.lang.Double        => d
-    case d: java.math.BigDecimal    => d.doubleValue
-    case d: scala.math.BigDecimal   => d.doubleValue
-    case s: String                  => s
-    case b: Array[Byte]             => b
-    case t: java.sql.Timestamp      => fmtInstant(t.toInstant)
-    case i: java.time.Instant       => fmtInstant(i)
-    // TIMESTAMP_NTZ rows arrive as LocalDateTime — format like the zoned
-    // cases (isoformat sep=' '), not LocalDateTime.toString's 'T' form
-    // (which even drops :00 seconds), so DATETIME columns stay uniform
-    case d: java.time.LocalDateTime => fmtInstant(d.toInstant(ZoneOffset.UTC))
-    case d: java.sql.Date           => d.toString
-    case d: java.time.LocalDate     => d.toString
-    case other                      => String.valueOf(other)
+  /** Encodes Spark internal rows of `schema` as SQLite records, one at a
+    * time into a reused [[SqliteFormat.RecordBuilder]]. The storage class
+    * of each column type, as Python's sqlite3 adapters store it:
+    *  - BOOLEAN and the integer types: INTEGER (a boolean as 1 or 0);
+    *  - FLOAT, DOUBLE and DECIMAL: REAL;
+    *  - STRING: TEXT, its UTF-8 bytes;
+    *  - BINARY: BLOB;
+    *  - TIMESTAMP and TIMESTAMP_NTZ: TEXT `yyyy-MM-dd HH:mm:ss[.ffffff]`
+    *    ([[datetime]]); DATE: TEXT `yyyy-MM-dd` (proleptic Gregorian);
+    *  - any other type: TEXT, the `String.valueOf` of its external value.
+    *
+    * Nested columns never reach it: `SnapshotSink.flattenForSql` encodes
+    * them as JSON text first.
+    */
+  final class RecordEncoder(schema: StructType) {
+    private val types = schema.fields.map(_.dataType)
+    private val toExternal = types.map(CatalystTypeConverters.createToScalaConverter)
+    private val record = new SqliteFormat.RecordBuilder
+
+    /** Encodes `row`; returns the record's length, its bytes being
+      * `bytes(0 until length)` until the next call.
+      */
+    def apply(row: InternalRow): Int = {
+      record.clear()
+      var i = 0
+      while (i < types.length) {
+        if (row.isNullAt(i)) record.putNull()
+        else types(i) match {
+          case BooleanType                      => record.putLong(if (row.getBoolean(i)) 1L else 0L)
+          case ByteType                         => record.putLong(row.getByte(i).toLong)
+          case ShortType                        => record.putLong(row.getShort(i).toLong)
+          case IntegerType                      => record.putLong(row.getInt(i).toLong)
+          case LongType                         => record.putLong(row.getLong(i))
+          case FloatType                        => record.putDouble(row.getFloat(i).toDouble)
+          case DoubleType                       => record.putDouble(row.getDouble(i))
+          case d: DecimalType                   =>
+            record.putDouble(row.getDecimal(i, d.precision, d.scale).toJavaBigDecimal.doubleValue)
+          case _: StringType                    => putUtf8(row.getUTF8String(i))
+          case BinaryType                       => record.putBlob(row.getBinary(i))
+          case TimestampType | TimestampNTZType => record.putText(datetime(row.getLong(i)))
+          case DateType                         => record.putText(LocalDate.ofEpochDay(row.getInt(i).toLong).toString)
+          case dt                               => record.putText(String.valueOf(toExternal(i)(row.get(i, dt))))
+        }
+        i += 1
+      }
+      record.finish()
+    }
+
+    def bytes: Array[Byte] = record.bytes
+
+    // copied as they are when valid UTF-8; otherwise as Java decodes them,
+    // each malformed sequence replaced by U+FFFD
+    private def putUtf8(s: UTF8String): Unit =
+      if (s.isValid) {
+        val at = record.text(s.numBytes)
+        s.writeToMemory(record.bodyBytes, Platform.BYTE_ARRAY_OFFSET + at.toLong)
+      } else record.putText(s.toString)
   }
 }
 
-/** Snapshot commit for the native SQLite destination. Tables were staged as
-  * parquet (full write parallelism, observed row counts); the commit — the
-  * inherently single-file, single-writer step — reads each staged table in
-  * this process, with no Spark job: the schema from one footer
-  * ([[graft.Tables.parquetFiles]]), then each data file in path order
-  * through Spark's own parquet reader, one file open at a time, its rows
-  * turned back into `Row`s by the encoder `collect()` uses. Memory stays
-  * bounded by one reader batch. The rows go into a fresh database file,
-  * which is then atomically renamed over the destination. Readers therefore
-  * always see a complete snapshot: stronger than the reference's per-table
-  * temp-swap, same observable guarantee (K2), and a failed run leaves the
-  * previous database untouched (K3).
+/** Snapshot commit for the native SQLite destination. Tables were staged
+  * as SQLite records ([[SqliteRecordFormat]]): full write parallelism,
+  * every row encoded on the executor that produced it, observed row
+  * counts. The commit — the inherently single-file, single-writer step —
+  * runs in this process with no Spark job: for each table, in name order,
+  * it takes the DDL from the first staged file's header, then appends each
+  * file's records, files in path order, to the table's pages as they are.
+  * Memory stays bounded by one page and one record. The records go into a
+  * fresh database file, which is then atomically renamed over the
+  * destination. Readers therefore always see a complete snapshot: stronger
+  * than the reference's per-table temp-swap, same observable guarantee
+  * (K2), and a failed run leaves the previous database untouched (K3).
   */
 final case class SqliteSnapshotCommit(cfg: SqliteDestination, runId: String,
                                       tables: Seq[String]) extends SnapshotCommit {
@@ -104,22 +144,25 @@ final case class SqliteSnapshotCommit(cfg: SqliteDestination, runId: String,
   def stagingDir: String = s"${cfg.database}.staging/$runId"
 
   def commit(spark: SparkSession): Unit = {
+    val fs = new Path(stagingDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new File(s"${cfg.database}.tmp-$runId")
     val writer = new SqliteDbWriter(tmp)
     try {
       tables.sorted.foreach { t =>
-        val (schema, files) = graft.Tables.parquetFiles(spark, s"$stagingDir/$t").getOrElse(
-          throw new IllegalStateException(s"staged table `$t` ($stagingDir/$t) has no parquet file"))
-        val tw = writer.table(t, SqliteDdl.createTable(t, schema))
-        val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
-          new StructType(), schema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-          spark.sessionState.newHadoopConf())
-        val toRow = ExpressionEncoder(schema).resolveAndBind().createDeserializer()
-        files.foreach { f =>
-          val rows = read(PartitionedFile(InternalRow.empty, SparkPath.fromFileStatus(f), 0,
-            f.getLen, Array.empty, f.getModificationTime, f.getLen))
-          try rows.foreach(r => tw.addRow(toRow(r).toSeq.map(SqliteDdl.toStorage)))
-          finally rows match { case c: java.io.Closeable => c.close(); case _ => () }
+        val files = SqliteRecordFormat.stagedFiles(fs, new Path(s"$stagingDir/$t"))
+        if (files.isEmpty)
+          throw new IllegalStateException(s"staged table `$t` ($stagingDir/$t) has no record file")
+        files.foldLeft(Option.empty[(StructType, writer.TableWriter)]) { (table, f) =>
+          val in = new SqliteRecordFormat.Reader(fs, f)
+          try {
+            val (schema, tw) =
+              table.getOrElse(in.schema -> writer.table(t, SqliteDdl.createTable(t, in.schema)))
+            if (in.schema != schema)
+              throw new IllegalStateException(s"staged file $f of table `$t` has schema " +
+                s"${in.schema.simpleString}, not ${schema.simpleString}")
+            in.foreach(tw.addPayload)
+            Some(schema -> tw)
+          } finally in.close()
         }
       }
       writer.close()
@@ -134,16 +177,14 @@ final case class SqliteSnapshotCommit(cfg: SqliteDestination, runId: String,
       // Delete ONLY this run's subdir — a concurrent run staging against the
       // same database owns its own <runId> sibling, and stranded siblings
       // are Vacuum.vacuumSqlite's job (same discipline as _staging/<runId>).
-      val fs = new org.apache.hadoop.fs.Path(stagingDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
       // guarded: a transient cleanup failure in this finally would
       // otherwise REPLACE the real commit exception; a stranded staging
       // subdir is Vacuum's job either way
-      try fs.delete(new org.apache.hadoop.fs.Path(stagingDir), true)
+      try fs.delete(new Path(stagingDir), true)
       catch { case _: java.io.IOException => () }
       // opportunistic: remove the .staging root iff it is now empty
       // (non-recursive delete refuses a non-empty directory)
-      try fs.delete(new org.apache.hadoop.fs.Path(s"${cfg.database}.staging"), false)
+      try fs.delete(new Path(s"${cfg.database}.staging"), false)
       catch { case _: java.io.IOException => () }
     }
   }

@@ -1,10 +1,12 @@
 package graft
 
 import java.nio.file.Files
+import java.time.{Instant, LocalDate, LocalDateTime, ZoneOffset}
+import java.time.format.DateTimeFormatter
 
-import graft.config.SqliteDestination
+import graft.config.{SqliteDest, SqliteDestination}
 import graft.query.Snapshot
-import graft.sink.{SqliteDbReader, SqliteDdl, SqliteSnapshotCommit}
+import graft.sink.{SnapshotSink, SqliteDbReader, SqliteSnapshotCommit}
 import graft.sources.SqliteSource
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -13,8 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** [[Tables.readParquet]] resolves a parquet path's schema from one footer
   * read in-process, without a Spark job. This spec pins that the result is
   * exactly Spark's own non-merging inference, that every path it does not
-  * handle keeps Spark's behaviour, and that the mount runs no inference job
-  * and the SQLite commit no job at all.
+  * handle keeps Spark's behaviour, and that the mount runs no inference job.
+  * The SQLite commit, which reads staged SQLite records rather than
+  * parquet, is pinned here too: it runs no job at all and commits each
+  * staged row in its column type's storage class.
   */
 class ParquetReadSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
@@ -112,12 +116,35 @@ class ParquetReadSpec extends AnyFunSuite {
     val tables = Seq("alpha", "beta", "gamma")
     val commit = SqliteSnapshotCommit(cfg, "run1", tables)
     tables.zipWithIndex.foreach { case (t, i) =>
-      spark.range(i + 2).select(col("id"), col("id").cast("string").as("name"))
-        .coalesce(1).write.parquet(s"${commit.stagingDir}/$t")
+      SnapshotSink.writeTable(spark.range(i + 2).select(col("id"), col("id").cast("string").as("name"))
+        .coalesce(1), SqliteDest(cfg), s"${commit.stagingDir}/$t")
     }
     assert(jobsIn(commit.commit(spark)) == 0)
     assert(SqliteSource.register(spark, cfg.database).sorted == tables)
     assert(spark.table("gamma").count() == 4)
+  }
+
+  private val wholeSecond = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
+  private val fractional = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")
+
+  /** The storage class Python's sqlite3 adapters give a `collect()` value
+    * taken with java.time values: the oracle of the commit's records.
+    */
+  private def toStorage(v: Any): Any = v match {
+    case null                       => null
+    case b: Boolean                 => if (b) 1L else 0L
+    case b: Byte                    => b.toLong
+    case s: Short                   => s.toLong
+    case i: Int                     => i.toLong
+    case l: Long                    => l
+    case f: Float                   => f.toDouble
+    case d: Double                  => d
+    case d: java.math.BigDecimal    => d.doubleValue
+    case s: String                  => s
+    case b: Array[Byte]             => b
+    case i: Instant                 => toStorage(LocalDateTime.ofInstant(i, ZoneOffset.UTC))
+    case t: LocalDateTime           => (if (t.getNano == 0) wholeSecond else fractional).format(t)
+    case d: LocalDate               => d.toString
   }
 
   test("SqliteSnapshotCommit commits each staged row as toStorage of its collect()") {
@@ -142,20 +169,21 @@ class ParquetReadSpec extends AnyFunSuite {
       orNull(timestamp_micros(micros)).as("ts"),
       orNull(timestamp_micros(micros).cast("timestamp_ntz")).as("ntz"),
       orNull(date_add(lit("1999-12-30").cast("date"), col("id").cast("int"))).as("day"))
+    val tables = Map("typed" -> typed.repartition(3), "empty" -> typed.filter(lit(false)))
     // several part files, and a table with no row
-    typed.repartition(3).write.parquet(s"${commit.stagingDir}/typed")
-    typed.filter(lit(false)).write.parquet(s"${commit.stagingDir}/empty")
-    assert(new java.io.File(s"${commit.stagingDir}/typed").list().count(_.endsWith(".parquet")) == 3)
+    tables.foreach { case (t, df) => SnapshotSink.writeTable(df, SqliteDest(cfg), s"${commit.stagingDir}/$t") }
+    assert(new java.io.File(s"${commit.stagingDir}/typed").list().count(_.endsWith(".sqlrec")) == 3)
     // bytes compare by content
     def multiset(rows: Iterator[Seq[Any]]) = rows
       .map(_.map { case b: Array[Byte] => b.toSeq; case v => v })
       .toSeq.groupBy(identity).map { case (r, n) => r -> n.size }
-    val want = Seq("typed", "empty").map { t =>
-      val df = spark.read.parquet(s"${commit.stagingDir}/$t")
-      t -> (df.columns.toSeq, multiset(df.collect().iterator.map(_.toSeq.map(SqliteDdl.toStorage))))
-    }.toMap
+    spark.conf.set("spark.sql.datetime.java8API.enabled", "true")
+    // toDF: a Dataset's row encoder reads the setting when it is built
+    val want = try tables.map { case (t, df) =>
+      t -> (df.columns.toSeq, multiset(df.toDF().collect().iterator.map(_.toSeq.map(toStorage))))
+    } finally spark.conf.unset("spark.sql.datetime.java8API.enabled")
     assert(want("typed")._2.values.sum == 40 && want("empty")._2.isEmpty)
-    commit.commit(spark)
+    assert(jobsIn(commit.commit(spark)) == 0)
     val r = new SqliteDbReader(new java.io.File(cfg.database))
     try {
       r.verifyAll()

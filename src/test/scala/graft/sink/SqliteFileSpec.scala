@@ -48,6 +48,38 @@ class SqliteFileSpec extends AnyFunSuite {
     }
   }
 
+  private def hex(b: Array[Byte]): String = b.map(x => f"${x & 0xff}%02x").mkString
+
+  test("records encode to the format's bytes for every serial type") {
+    val golden: Seq[(Seq[Any], String)] = Seq(
+      Seq(null)                       -> "0200",
+      Seq(5L)                         -> "020105",
+      Seq(-1L)                        -> "0201ff",
+      Seq(300L)                       -> "0202012c",
+      Seq(-8388608L)                  -> "0203800000",
+      Seq(2147483647L)                -> "02047fffffff",
+      Seq(140737488355327L)           -> "02057fffffffffff",
+      Seq(-140737488355328L)          -> "0205800000000000",
+      Seq(140737488355328L)           -> "02060000800000000000",
+      Seq(Long.MinValue)              -> "02068000000000000000",
+      Seq(1.5)                        -> "02073ff8000000000000",
+      Seq(0L)                         -> "0208",
+      Seq(1L)                         -> "0209",
+      Seq("")                         -> "020d",
+      Seq("abc")                      -> "0213616263",
+      Seq("é")                        -> "0211c3a9",
+      Seq(Array[Byte]())              -> "020c",
+      Seq(Array[Byte](1, -2))         -> "021001fe",
+      Seq(7L, "hi", null, 0L)         -> "05011100080768 69".replace(" ", ""),
+      // a 64-byte text's serial type 141 takes a two-byte varint
+      Seq("x" * 64)                   -> ("03810d" + "78" * 64),
+      // 127 serial bytes: the header's length 129 takes two bytes itself
+      Seq.fill(127)(null)             -> ("8101" + "00" * 127))
+    golden.foreach { case (values, want) =>
+      assert(hex(SqliteFormat.encodeRecord(values)) == want, values.take(4))
+    }
+  }
+
   test("property: arbitrary records round-trip the serial-type codec") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     val value: Gen[Any] = Gen.oneOf(
@@ -55,14 +87,22 @@ class SqliteFileSpec extends AnyFunSuite {
       Gen.chooseNum(Long.MinValue, Long.MaxValue).map(l => l: Any),
       Gen.chooseNum(-1e12, 1e12).map(d => d: Any),
       Gen.asciiPrintableStr.map(s => s: Any),
+      Gen.listOf(Gen.oneOf('a', 'ü', '京', '✓')).map(_.mkString: Any),
       Gen.listOf(Gen.chooseNum(-128, 127).map(_.toByte)).map(_.toArray: Any))
-    val row: Gen[List[Any]] = Gen.listOfN(6, value)
+    val row: Gen[List[Any]] = Gen.chooseNum(0, 140).flatMap(Gen.listOfN(_, value))
+    // one builder for every record, as a staging task uses it
+    val reused = new SqliteFormat.RecordBuilder
     val prop = Prop.forAll(row) { r =>
-      val back = SqliteFormat.decodeRecord(SqliteFormat.encodeRecord(r))
-      back.length == r.length && r.zip(back).forall {
-        case (a: Array[Byte], b: Array[Byte]) => a.sameElements(b)
-        case (a, b)                           => a == b
-      }
+      val bytes = SqliteFormat.encodeRecord(r)
+      reused.clear()
+      r.foreach(reused.put)
+      val n = reused.finish()
+      val back = SqliteFormat.decodeRecord(bytes)
+      java.util.Arrays.equals(bytes, java.util.Arrays.copyOf(reused.bytes, n)) &&
+        back.length == r.length && r.zip(back).forall {
+          case (a: Array[Byte], b: Array[Byte]) => a.sameElements(b)
+          case (a, b)                           => a == b
+        }
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(300), prop)
     assert(res.passed, res.status.toString)
