@@ -35,7 +35,7 @@ object Bench {
     val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_TIMEOUT_SEC", "300").toLong
     val planDir = sys.env.get("SPARK_GRAFT_PLANS")
     val keep = Harness.only(SparkEntry.queries.keySet)
-    val spark = Harness.session("graft-bench")
+    val spark = Main.session("graft-bench")
 
     // JVM/codegen warmup outside the timed region (steady-state throughput
     // is the comparison target, not first-query JIT cost). A warmup failure

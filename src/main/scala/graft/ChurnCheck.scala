@@ -38,7 +38,7 @@ object ChurnCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    val spark = Harness.session("graft-churn")
+    val spark = Main.session("graft-churn")
 
     def timed(build: => DataFrame): Double =
       (1 to reps).map { _ =>

@@ -8,35 +8,12 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
 /** The measurement harness the mains share (Bench, Verify, ScaleCheck,
-  * ChurnCheck, RecallCurve) and the test session: one session recipe, one
-  * name filter, one guarded run, one scoped noop run and one job counter,
-  * so a number from one main means what the same number means in another.
-  *
-  * `graft.Main` builds its own session: its master is a deployment
-  * setting (`SPARK_MASTER`), not a measurement one.
+  * ChurnCheck, RecallCurve): one name filter, one guarded run, one scoped
+  * noop run and one job counter, so a number from one main means what the
+  * same number means in another. Their sessions, like the CLI's and the
+  * test session, come from `graft.Main.session`.
   */
 object Harness {
-  /** Local worker threads: `SPARK_GRAFT_CPUS`, else every available core. */
-  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-    .getOrElse(Runtime.getRuntime.availableProcessors)
-
-  /** `local[n]` with `n` shuffle partitions, UTC session time, INT64(NANOS)
-    * parquet timestamps read as longs (`Tables.events` normalizes them), no
-    * UI and ERROR logging. Everything else is Spark's default (AQE is on).
-    */
-  def session(app: String, n: Int = cpus): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$n]")
-      .appName(app)
-      .config("spark.sql.shuffle.partitions", n.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
-  }
-
   /** The `SPARK_GRAFT_ONLY` filter (comma-separated names), or keep-all when
     * unset. A name outside `allowed` fails loudly: a typo would otherwise
     * time nothing and leave a valid-looking, incomplete artifact.

@@ -89,6 +89,31 @@ object Main {
       |    database: cloud2sql.db
       |""".stripMargin
 
+  /** `SPARK_GRAFT_CPUS` from `env`, else every core; anything but an
+    * integer ≥ 1 fails here, by name, rather than as Spark's `local[0]`. */
+  def cpus(env: Map[String, String]): Int =
+    env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(v =>
+      v.trim.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be an integer >= 1, got '$v'")))
+
+  /** The session recipe of every graft JVM (CLI, harness mains, tests):
+    * `master`, else `local[n]`, with `n` shuffle partitions, UTC session time,
+    * INT64(NANOS) parquet timestamps read as longs (`Tables.events`
+    * normalizes them), no UI and ERROR logging; all else is Spark's default.
+    */
+  def session(app: String, n: Int = cpus(sys.env), master: Option[String] = None): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(master.getOrElse(s"local[$n]"))
+      .appName(app)
+      .config("spark.sql.shuffle.partitions", n.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
   def registry: Map[String, Source] = Map(
     "example" -> new Source {
       val name = "example"
@@ -113,16 +138,8 @@ object Main {
 
     val config = GraftConfig.parse(Files.readString(Paths.get(args.config.get)))
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts INT64(NANOS)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel(
-      if (args.show == "log") { if (args.debug) "DEBUG" else "INFO" } else "ERROR")
+    val spark = session("graft", master = sys.env.get("SPARK_MASTER"))
+    if (args.show == "log") spark.sparkContext.setLogLevel(if (args.debug) "DEBUG" else "INFO")
 
     // wire config-driven sources: graph_export picks its path from config;
     // its kind model arrives embedded in the export (no hardcoded schema)

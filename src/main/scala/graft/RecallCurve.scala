@@ -44,7 +44,7 @@ object RecallCurve {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = Harness.session("graft-recall-curve")
+    val spark = Main.session("graft-recall-curve")
 
     val v = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))

@@ -190,7 +190,7 @@ object ScaleCheck {
     // for the whole list
     val keep = Harness.only(
       Queries.toSet ++ Set("kmeans", "substr_index", "bpe_rounds", "knn_ann", "__none__"))
-    val spark = Harness.session("graft-scale-check")
+    val spark = Main.session("graft-scale-check")
 
     val d1 = s"$base/x1"
     val dN = s"$base/x$copies"

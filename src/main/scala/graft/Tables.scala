@@ -119,51 +119,43 @@ object Tables {
     * r17 measured the blanket form — heavy queries gained 1.4–2× but every
     * cheap query ate the exchange as pure overhead (q_topk 0.23 → 0.93 s),
     * a net loss. Guarded by the optimizer's size ESTIMATE of the input
-    * subtree: spreading fires only when the bytes are ≤ cores ×
-    * SPARK_GRAFT_SPREAD_MB (default 4 MB/core — the micro-shuffle is
-    * bounded by the threshold itself), so for any at-scale table the
-    * condition is false and the heavy pipeline keeps the bare scan — the
-    * fix cannot fire where the scan is already parallel. Partitioning
-    * HASHES `key` (deterministic, retry-safe, and skips round-robin's
-    * map-side sort — guide §2.5's deterministic-key advice); pass a
-    * high-cardinality column. Filter pushdown and column pruning pass
-    * through RepartitionByExpression, so PushedFilters/ReadSchema are
-    * unchanged (plans/r17). Env knob: 0 disables all spreading.
+    * subtree: spreading fires only when the bytes are ≤ cores × 4 MB (the
+    * micro-shuffle is bounded by the threshold itself), so for any
+    * at-scale table the condition is false and the heavy pipeline keeps
+    * the bare scan — the fix cannot fire where the scan is already
+    * parallel. Partitioning HASHES `key` (deterministic, retry-safe, and
+    * skips round-robin's map-side sort — guide §2.5's deterministic-key
+    * advice); pass a high-cardinality column. Filter pushdown and column
+    * pruning pass through RepartitionByExpression, so
+    * PushedFilters/ReadSchema are unchanged (plans/r17).
     */
-  private val SpreadMbPerCore =
-    sys.env.getOrElse("SPARK_GRAFT_SPREAD_MB", "4").toLong
-
-  /** The spread predicate, exposed: true when `df`'s optimizer size
-    * estimate is within the small-input regime (≤ cores ×
-    * SPARK_GRAFT_SPREAD_MB). Operators with two proven physical shapes —
-    * a broadcast-join fast path for small inputs, a single-exchange
-    * shape for large ones — switch on this, the same adaptivity rule
-    * [[spreadSmall]] itself uses (r17: the substring duplicate marking
-    * and the jaccard df-cap). Streaming frames report false (their
-    * queryExecution cannot be inspected pre-start).
-    */
-  def smallInput(df: DataFrame): Boolean = {
-    if (df.isStreaming || SpreadMbPerCore <= 0) return false
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    // bytes-only predicate: an additional file-count condition ("skip the
-    // spread when the input already ships ≥ par/4 files") was A/B'd at
-    // 10× and REVERTED — the 10-file synthesized tree still gained from
-    // 32-way spreading on the digest-heavy explodes (q_text_lm_smoothed
-    // 3.25 s without vs 2.17 s with, same leg)
-    df.queryExecution.optimizedPlan.stats.sizeInBytes <=
-      BigInt(par.toLong * SpreadMbPerCore * (1L << 20))
-  }
-
   def spreadSmall(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame =
     if (smallInput(df))
       df.repartition(df.sparkSession.sparkContext.defaultParallelism, key)
     else df
 
+  /** The spread predicate, exposed: true when `df`'s optimizer size
+    * estimate is within the small-input regime (≤ cores × 4 MB).
+    * Operators with two proven physical shapes — a broadcast-join fast
+    * path for small inputs, a single-exchange shape for large ones —
+    * switch on this, the same adaptivity rule [[spreadSmall]] itself uses
+    * (r17: the substring duplicate marking and the jaccard df-cap).
+    * Streaming frames report false (their queryExecution cannot be
+    * inspected pre-start).
+    */
+  def smallInput(df: DataFrame): Boolean =
+    // bytes-only predicate: an additional file-count condition ("skip the
+    // spread when the input already ships ≥ cores/4 files") was A/B'd at
+    // 10× and REVERTED — the 10-file synthesized tree still gained from
+    // 32-way spreading on the digest-heavy explodes (q_text_lm_smoothed
+    // 3.25 s without vs 2.17 s with, same leg)
+    !df.isStreaming && df.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      BigInt(df.sparkSession.sparkContext.defaultParallelism * (4L << 20))
+
   /** The BROADCAST-regime predicate — a much tighter bound than
-    * [[smallInput]] (absolute bytes, default 4 MB via
-    * SPARK_GRAFT_BCAST_REGIME_MB): true when a derived per-key set of the
-    * input (duplicated window hashes, hot shingles, probe hash sets) can
-    * be expected to stay under Spark's broadcast threshold. Operators
+    * [[smallInput]] (4 MB, absolute): true when a derived per-key set of
+    * the input (duplicated window hashes, hot shingles, probe hash sets)
+    * can be expected to stay under Spark's broadcast threshold. Operators
     * with a broadcast-join fast path and a one-exchange window shape
     * switch HERE, not on [[smallInput]]: r17 measured the shuffled
     * fallback of the join shape at 3× the window's cost at 10× sf0.1,
@@ -175,22 +167,17 @@ object Tables {
     * per-key frame (duplicated window hashes, hot shingles, probe hash
     * sets) that can exceed the input text's estimate — duplicated-hash
     * rows are 16 B/position vs ~1 B/char of text, though only the
-    * duplicated/hot SUBSET survives the aggregate. The default 4 MB
-    * bound therefore sits 2.5× under Spark's 10 MB
+    * duplicated/hot SUBSET survives the aggregate. The 4 MB bound
+    * therefore sits 2.5× under Spark's 10 MB
     * `spark.sql.autoBroadcastJoinThreshold`: a derived set a few times
     * larger than the input estimate still broadcasts rather than
     * silently falling back to the shuffled semi-join (the 3×-worse
-    * cliff above). Raising SPARK_GRAFT_BCAST_REGIME_MB toward — or past
-    * — the autoBroadcastJoinThreshold removes that margin; tune the two
+    * cliff above). Raising the bound toward — or past — the
+    * autoBroadcastJoinThreshold removes that margin; change the two
     * together.
     */
-  private val BcastRegimeMb =
-    sys.env.getOrElse("SPARK_GRAFT_BCAST_REGIME_MB", "4").toLong
-  def broadcastRegime(df: DataFrame): Boolean = {
-    if (df.isStreaming || BcastRegimeMb <= 0) return false
-    df.queryExecution.optimizedPlan.stats.sizeInBytes <=
-      BigInt(BcastRegimeMb * (1L << 20))
-  }
+  def broadcastRegime(df: DataFrame): Boolean =
+    !df.isStreaming && df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(4L << 20)
 
   /** events.parquet: `ts` has shipped as INT64 TIMESTAMP(NANOS) (testdata
     * generations ≤ r7) and as INT64 TIMESTAMP(isAdjustedToUTC=false, MICROS)

@@ -14,7 +14,7 @@ object Verify {
         sys.exit(2)
     }
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val spark = Harness.session("graft-verify")
+    val spark = Main.session("graft-verify")
     // shuffle partitions decoupled from the thread count so the robustness
     // replay (scripts/replay.sh) can re-verify the whole surface at an odd
     // partition count — the cheap stand-in for "a real cluster
@@ -47,8 +47,7 @@ object Verify {
     // toggle) is isolated on its own newSession(). Wall time is what kills
     // a round on a loaded driver box — the round-5 artifacts were zeroed by
     // exactly that.
-    val par = sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR", "4").toInt.max(1)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
     // failures must be LOUD in the artifacts, not just stderr: r8's driver

@@ -597,23 +597,11 @@ object Dedup {
         // no settling 4.28 s; re-pinned r9 on Spark 4.1.2 (min reps,
         // BASELINE.md's outlier-host estimator) 2.22 s / 3.14 s / 4.51 s —
         // the eager checkpoint wins both times because five downstream
-        // consumers otherwise re-execute or re-scan the banded self-join.
-        // The env knob exists so the next runtime bump re-measures with no
-        // code edit.
-        .transform { e =>
-          sys.env.getOrElse("SPARK_GRAFT_PAGERANK_SETTLE", "checkpoint") match {
-            case "cache"      => graft.CacheTracker.cached(e)
-            case "none"       => e
-            // settled: a runner scope frees the checkpoint's RDD blocks at
-            // query end — Dataset.unpersist never touches them (the leak
-            // class CacheTracker.releaseLocalCheckpoint documents)
-            case "checkpoint" => graft.CacheTracker.settled(e.localCheckpoint())
-            // a measurement knob that silently falls back would record the
-            // WRONG shape's numbers under a typo'd label — fail instead
-            case other => sys.error(
-              s"SPARK_GRAFT_PAGERANK_SETTLE=$other — use checkpoint|cache|none")
-          }
-        }
+        // consumers otherwise re-execute or re-scan the banded self-join
+        // (re-measure the three after a Spark upgrade). `settled`: a runner
+        // scope frees the checkpoint's RDD blocks at query end, which
+        // Dataset.unpersist never does (CacheTracker.releaseLocalCheckpoint).
+        .transform(e => graft.CacheTracker.settled(e.localCheckpoint()))
       val nodes = edges.select(col("src").as("nid")).distinct()
       val deg = edges.groupBy(col("src").as("did")).agg(count(lit(1)).as("deg"))
       // ranks carry schema (rid, srank); every name in the join is unique

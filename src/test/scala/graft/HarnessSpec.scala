@@ -4,20 +4,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The shared measurement harness: the session recipe, the name filter,
-  * the scoped noop run, the watchdog and the job counter.
+/** The shared measurement harness: the name filter, the scoped noop run,
+  * the watchdog and the job counter.
   */
 class HarnessSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
-
-  test("session: local[n] with n shuffle partitions, UTC, nanosAsLong, no UI") {
-    val conf = spark.conf
-    assert(spark.sparkContext.master == "local[4]")
-    assert(conf.get("spark.sql.shuffle.partitions") == "4")
-    assert(conf.get("spark.sql.session.timeZone") == "UTC")
-    assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
-    assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
-  }
 
   test("only: unset keeps all; unknown names fail and are listed") {
     val allowed = Set("q_a", "q_b", "q_c")

@@ -2,8 +2,50 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** CLI argument surface parity (reference __main__.py:24-66). */
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
+/** CLI argument surface parity (reference __main__.py:24-66) and the one
+  * session recipe, `Main.session`. */
 class MainSpec extends AnyFunSuite {
+  private lazy val spark = SparkSuite.spark
+
+  test("session: local[n] with n shuffle partitions, UTC, nanosAsLong, no UI") {
+    val conf = spark.conf
+    assert(spark.sparkContext.master == "local[4]")
+    assert(conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
+  }
+
+  test("cpus: SPARK_GRAFT_CPUS, else every core; anything but an integer >= 1 fails by name") {
+    assert(Main.cpus(Map.empty) == Runtime.getRuntime.availableProcessors)
+    assert(Main.cpus(Map("SPARK_GRAFT_CPUS" -> " 3 ")) == 3)
+    for (v <- Seq("0", "-2", "four", "", "2.5", "99999999999"))
+      assert(intercept[IllegalArgumentException](Main.cpus(Map("SPARK_GRAFT_CPUS" -> v)))
+        .getMessage == s"SPARK_GRAFT_CPUS must be an integer >= 1, got '$v'")
+  }
+
+  /** `file:line: text` of each source line matching `pattern`; the gates
+    * below write their patterns so that this file matches neither. */
+  private def sourceLines(pattern: String): Seq[String] = for {
+    root <- Seq("src/main/scala", "src/test/scala")
+    f <- Files.walk(Paths.get(root)).iterator.asScala.map(_.toString).filter(_.endsWith(".scala")).toSeq.sorted
+    (l, i) <- Files.readAllLines(Paths.get(f)).asScala.zipWithIndex if pattern.r.findFirstIn(l).nonEmpty
+  } yield s"$f:${i + 1}: ${l.trim}"
+
+  test("only the recipe in graft.Main builds a session") {
+    // a scaladoc usage line (GraftExtensions) names the builder, calls nothing
+    val found = sourceLines("SparkSession" + """\s*\.\s*builder\b""")
+      .filterNot(_.split(": ", 2)(1).startsWith("*"))
+    assert(found.map(_.takeWhile(_ != ':')) == Seq("src/main/scala/graft/Main.scala"), found.mkString("\n"))
+  }
+
+  test("the tuning knobs replaced by constants are named nowhere") {
+    val found = sourceLines("SPARK_GRAFT_(SPREAD_MB|BCAST_REGIME_MB|PAGERANK_SETTLE|VERIFY_PAR)")
+    assert(found.isEmpty, found.mkString("\n"))
+  }
 
   test("flags parse; CLI wins over environment; env prefix accepted") {
     val a = Main.parseArgs(Seq("--config", "/x.yaml", "--show", "none", "--debug"))

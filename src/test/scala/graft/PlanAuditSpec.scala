@@ -160,11 +160,11 @@ class PlanAuditSpec extends AnyFunSuite {
     // keyed by the hash pair would be the regression.
     // The agg+semi-join shape is the SMALL-regime contract: pin the
     // regime first (ADVICE r17 #2) so the audit tests the shape contract,
-    // not the environment — with SPARK_GRAFT_BCAST_REGIME_MB=0 (or
-    // larger testdata) the operator legitimately plans the window shape
-    // and this assertion would fail spuriously.
+    // not the testdata — on documents past the 4 MB broadcast regime the
+    // operator legitimately plans the window shape and this assertion
+    // would fail spuriously.
     assume(Tables.broadcastRegime(Tables.documents(spark, dir)),
-      "testdata/env selects the large (window) regime — shape audit not applicable")
+      "testdata selects the large (window) regime — shape audit not applicable")
     val plan = queryPlan("q_dedup_substring")
     assert(plan.contains("Join"), s"q_dedup_substring lost its semi-join:\n$plan")
     assert(!plan.contains("CartesianProduct"), s"q_dedup_substring cartesian:\n$plan")

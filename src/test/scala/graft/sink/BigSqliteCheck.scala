@@ -17,7 +17,7 @@ object BigSqliteCheck {
     val dir = new java.io.File(args.headOption.getOrElse("/tmp/big-sqlite"))
     val rows = args.lift(1).fold(1000000L)(_.toLong)
     val reps = args.lift(2).fold(3)(_.toInt)
-    val spark = graft.Harness.session("BigSqliteCheck")
+    val spark = graft.Main.session("BigSqliteCheck")
     val table = spark.range(rows).select(
       col("id").cast("string").as("id"),
       (col("id") * 7919 % 100003).as("n"),

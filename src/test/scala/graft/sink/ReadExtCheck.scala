@@ -16,10 +16,7 @@ object ReadExtCheck {
     val r2 = new SqliteDbReader(new java.io.File("/tmp/smallpage.db"))
     println("smallpage rows: " + r2.rows("t").size + " pages: " + r2.pageCount)
     r2.close()
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Main.session("ReadExtCheck", 4)
     val df = graft.sources.SqliteSource.table(spark, "/tmp/ext.db", "accounts")
     df.show(false)
     println(df.schema.map(f => f.name + ":" + f.dataType.typeName).mkString(","))
